@@ -236,15 +236,7 @@ def _propagate(und, labels, max_iter, skew_safe, on_round):
         labels = observed.localCheckpoint(eager=True)
         if on_round is not None:
             on_round(_round)
-        if labels is observed:
-            # an instrument patched checkpointing to IDENTITY (the plan
-            # hasher, tools/plan_hash.py::_identity_checkpoints) — no
-            # action has executed, so Observation.get would block forever;
-            # fall back to the plain probe (values identical, and the
-            # extra job exists only under such instrumented builds)
-            converged = labels.filter(F.col("upd")).isEmpty()
-        else:
-            converged = not obs.get["n_upd"]
-        if converged:
+        # obs.get follows the eager checkpoint's own action, so it never waits
+        if not obs.get["n_upd"]:
             break
     return labels

@@ -220,14 +220,14 @@ def _topk_from_base(
     cluster with a checkpoint dir, swap for ``checkpoint`` (r13 ADVICE).
 
     ``defer`` (r14): a caller fusing SEVERAL bounded candidate lists
-    passes a list; the persisted base is appended to it and the top-k
-    plan is returned LAZY, so the caller can materialize all branches in
-    ONE action (independent subtrees overlap inside a single job instead
-    of serializing per-branch eager checkpoints — guide §2.6; the r13
-    per-branch form cost the hybrids 0.69–0.77x) and then unpersist
-    every deferred cache itself."""
-    cached = base.persist()
-    scored = _bm25_from_base(cached, n_terms, k1, b, id_col)
+    passes a list; the base is appended to it UNPERSISTED and the top-k
+    plan is returned LAZY, so the caller can persist every deferred base
+    and materialize all branches in ONE action (independent subtrees
+    overlap inside a single job instead of serializing per-branch eager
+    checkpoints — guide §2.6), then unpersist them. Cache substitution
+    happens when a plan executes, so persisting after the plan is built
+    still reads the base from cache."""
+    scored = _bm25_from_base(base, n_terms, k1, b, id_col)
     top = scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(topk)
     w = W.orderBy(F.col("score").desc(), F.col(id_col))
     out = top.select(
@@ -236,11 +236,13 @@ def _topk_from_base(
         F.col("score").alias(score_out),
     )
     if defer is not None:
-        defer.append(cached)
+        defer.append(base)
         return out
-    out = out.localCheckpoint(eager=True)
-    cached.unpersist(blocking=True)
-    return out
+    base.persist()
+    try:
+        return out.localCheckpoint(eager=True)
+    finally:
+        base.unpersist(blocking=True)
 
 
 def bm25_topk(

@@ -1,9 +1,9 @@
-"""Named query registry — the driver-verified capability surface.
+"""Named query registry — the oracle-checked capability surface.
 
 Each module exports ``QUERIES: dict[name -> (spark_fn, oracle_sql | None)]``
 where ``spark_fn(spark, sf_dir) -> DataFrame`` and ``oracle_sql`` is the
 DuckDB-equivalent ANSI SQL (None for genuinely non-SQL-expressible ops, which
-the driver checks rows-only).
+are checked rows-only).
 """
 
 from __future__ import annotations
@@ -44,123 +44,7 @@ def _resolve_oracle(sql: OracleSql) -> str | None:
     return _ORACLE_CACHE[key]
 
 
-#: Names hoisted to the FRONT of the registry. The driver's correctness gate
-#: checks a bounded prefix (~50 entries) of the registry in insertion order,
-#: so ordering IS the verification budget (r01/r02 lesson — queries past the
-#: cut get no row at all, and rows-only queries inside the prefix burn a slot
-#: on a "no_oracle" non-verdict).
-#:
-#: Round-13 allocation — the ENV-GATED registration freeze continues
-#: (spark-protobuf jar, google.protobuf, and nats-py re-checked ABSENT at
-#: the r13 open): no proto/NATS queries. The round's FOUR new
-#: registrations (never-green) head the prefix: ``text_quality_classifier``
-#: (fastText/CCNet-class hashed-bigram linear margin, r12 verdict ask #5),
-#: ``docs_curation_v4`` (the selection-layer capstone composing
-#: quota_topk → select_token_budget_by_group → leakage-safe split, ask
-#: #4), ``docs_dsir_select`` (DSIR domain-targeted selection with the
-#: whole-bit integer importance weight), and ``text_bigram_bits``
-#: (held-out bigram-LM fluency scoring with integer backoff — the
-#: KenLM-class perplexity-filter shape). The other 46 slots are pure
-#: rotation per ask #2, oldest-green
-#: first: all 21 r09 greens plus the 25 oldest r10 greens (each new
-#: registration displaced the NEWEST rotation entry — the tail r10
-#: greens — never an r09 one), so the post-r13 staleness histogram
-#: contains nothing older than r10-green. ``--plan-check`` cleared all
-#: 38 fingerprint-touched queries on scheme-8 plan-hash equality backed
-#: by the full-registry PARITY_EVIDENCE stamp regenerated per edit
-#: batch (173/173 on the closing tree; the r13
-#: edits — ADVICE guards/docstrings, oracle-SQL escaping, the
-#: parametrized components-SQL source — are all plan-neutral by
-#: construction, and the WindowExec-warning fix was done at the bench
-#: logger, not the plans, precisely so no honest re-queue was owed).
-#: Never-green registrations carry no ledger debt, so the late Arrow/
-#: slim-plan iterations on the four new queries cost no extra slots.
-#: Staleness remains DEPENDENCY-AWARE (semantic hash of every reachable
-#: package module);
-#: ``tests/test_registry_freshness.py::test_prefix_matches_recommendation``
-#: asserts this list equals the tool's derivation, and
-#: ``test_plan_evidence_entries_are_valid`` re-validates every clearing
-#: (fingerprint-at-clear, hash equality, own-segment guard) on each run.
-#: Rows-only (no-oracle) queries sit at the VERY END of the registry
-#: (_ROWS_ONLY_LAST): a "no_oracle" row is a wasted slot.
-#:
-#: r14 OPTIMIZATION-round update (round 2/2): the round's plan-shape
-#: changes — unigram window→persisted-join revert, hybrid RRF per-fusion
-#: materialization, bounded components for curation_v4, the components
-#: convergence Observation fold, the kmv branch fold — re-queue their 8
-#: query paths; additionally the ledger's same-module-HELPER blind spot
-#: was closed (helper semantic hashes now fold into the fingerprint —
-#: `_unigram_bit_scores`'s r13 rewrite had re-queued NEITHER of its
-#: callers, the r13-verdict #3 escape), which honestly re-queues
-#: ``docs_curation_v3`` and ``text_unigram_bits`` too. All 10 head the
-#: prefix (covering 4 of the verdict's 5 never-driver-verified r13
-#: changes); the 5th, ``text_bm25_rm3``, carries VALID plan-hash clearing
-#: evidence — its optimized logical plan is byte-identical to its
-#: r12-green baseline (the r13 persist/eager-checkpoint lifecycle is
-#: logical-plan-invisible) with a full-registry parity stamp on this
-#: tree — so it rotates on its r12 green instead of burning a slot.
-#: ``docs_dsir_select`` / ``text_bm25_topk`` cleared the same way for
-#: this round's dependency edits. Rotation tail: oldest-green first
-#: (r10/r11 greens). Derivation: ``tools/registry_status.py``; every
-#: touched query was ALSO oracle-checked exact-value during the round
-#: (driver_sim per edit + two full-registry runs + the oracle-parity
-#: pytest suite).
-_PREFIX_R14 = [
-    "docs_curation_v4",
-    "docs_curation_v3",
-    "dedup_components",
-    "dedup_prune",
-    "docs_leakage_safe_split",
-    "text_unigram_bits",
-    "rel_kmv_intersection",
-    "sim_hybrid_rrf",
-    "sim_hybrid_rrf3",
-    "sim_hybrid_rrf_ann",
-    "docs_weighted_mix",
-    "scan_scd2_intervals",
-    "text_pii_redact",
-    "text_gopher_filters",
-    "docs_snapshot_diff",
-    "docs_mixture_plan",
-    "scan_ewma_trend",
-    "rel_zorder_layout",
-    "scan_cohort_retention",
-    "docs_quality_percentile",
-    "scan_asof_tolerance",
-    "docs_quality_quantiles",
-    "text_countmin_topk",
-    "rel_hll_counts",
-    "scan_gapfill",
-    "scan_salted_agg",
-    "scan_asof_join",
-    "scan_interval_join",
-    "rel_udaf_cents",
-    "rel_scalar_functions",
-    "rel_semi_anti_customers",
-    "rel_count_distinct",
-    "rel_conditional_agg",
-    "rel_first_order_per_customer",
-    "rel_order_date_gaps",
-    "docs_chunk_sequences",
-    "text_char_diversity",
-    "sim_quantize_int8",
-    "rel_forecast_revenue",
-    "decon_bloom",
-    "docs_train_order",
-    "scan_funnel",
-    "scan_funnel_windowed",
-    "rel_mad_outliers",
-    "rel_hist_quantiles",
-    "text_pmi_topk",
-    "scan_path_mining",
-    "scan_hopping_rollup",
-    "scan_daily_dashboard",
-    "sim_hard_negatives",
-]
-#: rows-only queries (no oracle): the driver records "no_oracle" for these,
-#: so inside the prefix they waste a verification slot — keep them LAST.
-#: multimodal_resize's one-time execution proof is banked (green-by-nature
-#: row in CORRECTNESS_r03); from r04 on it lives back here.
+#: rows-only queries (no oracle) sit at the end of the registry.
 _ROWS_ONLY_LAST: list[str] = ["multimodal_phash", "multimodal_resize"]
 
 
@@ -195,13 +79,7 @@ def full_registry() -> Registry:
             assert name not in merged, f"duplicate query name {name}"
             merged[name] = (fn, _resolve_oracle(sql))
 
-    prefix = _PREFIX_R14
-    out: Registry = {}
-    for name in prefix:
-        out[name] = merged[name]
-    for name, entry in merged.items():
-        if name not in _ROWS_ONLY_LAST:
-            out.setdefault(name, entry)
+    out = {n: e for n, e in merged.items() if n not in _ROWS_ONLY_LAST}
     for name in _ROWS_ONLY_LAST:
         out[name] = merged[name]
     return out

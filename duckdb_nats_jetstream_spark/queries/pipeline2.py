@@ -128,9 +128,7 @@ def docs_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # peak task memory at the 10× replica vs 6.3 s / 4.8 GB for the capped
 # default (SCALING batch 27, PERF.md r09) — so it is excluded from every
 # scale harness (tools/stress_fullsweep.py SKIP table) and must not be
-# copied into any pipeline example. (Comment, not docstring: the pin must
-# not re-fingerprint the r09-green query fn — the ledger hashes the def
-# segment raw.)
+# copied into any pipeline example.
 def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fingerprint-sharing near-dup pairs (MOSS match step): self-join the
     winnowing fingerprints on fp, count shared prints per pair, keep pairs

@@ -43,16 +43,19 @@ BM25_TOPK_SQL = R.sql_bm25_topk(_QUERY_TERMS, topk=10)
 
 
 def _fused_checkpoint(fused, caches) -> DataFrame:
-    """Per-FUSION † lifecycle (r14, guide §2.6): materialize the fused
-    top-k in ONE eager checkpoint — the independent candidate subtrees
-    overlap inside that single action instead of serializing one eager
-    checkpoint per branch (the r13 per-branch form cost rrf_ann 0.69x /
-    rrf3 0.77x in the driver's bench) — then drop every deferred
-    candidate-base cache before returning."""
-    out = fused.localCheckpoint(eager=True)
+    """Per-FUSION † lifecycle (r14, guide §2.6): persist every deferred
+    candidate base, materialize the fused top-k in ONE eager checkpoint —
+    the independent candidate subtrees overlap inside that single action
+    instead of serializing one eager checkpoint per branch — then drop the
+    caches on any exit. Nothing is persisted while the fusion is built, so
+    a failed build leaks no cache."""
     for c in caches:
-        c.unpersist(blocking=True)
-    return out
+        c.persist()
+    try:
+        return fused.localCheckpoint(eager=True)
+    finally:
+        for c in caches:
+            c.unpersist(blocking=True)
 
 
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,10 +3,7 @@ way a 1000-executor cluster run would be: AQE on (runtime coalesce + skew
 join), Arrow for any Python exchange, UTC session time zone so timestamp
 semantics match the DuckDB oracle.
 
-Table readers and the ``spread`` parallelism helper live in ``tables.py``
-(split r09): they are in every query's dependency closure, this factory is
-in none — so session tuning no longer re-queues the whole registry for
-driver re-verification (r08 verdict ask #5).
+Table readers and the ``spread`` parallelism helper live in ``tables.py``.
 """
 
 from __future__ import annotations

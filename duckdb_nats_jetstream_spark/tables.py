@@ -1,11 +1,5 @@
-"""Table access + partition-spread helpers — the STABLE dependency layer.
-
-Split out of ``session.py`` (r08 verdict ask #5): these three helpers sit
-in virtually every query's dependency closure, so while they lived next to
-``get_spark`` any session-tuning tweak re-queued all ~157 oracle queries
-for driver re-verification. They change rarely (``spread`` twice in eight
-rounds, the readers never), so they get their own module and ``session.py``
-keeps only the session factory.
+"""Table access + partition-spread helpers used by virtually every query;
+``session.py`` keeps only the session factory.
 """
 
 from __future__ import annotations

@@ -74,13 +74,13 @@ def test_components_bounded_min_id_via_one_leaf_edge(spark):
     assert got == {0: 0, 3: 0, 7: 0, 12: 0}
 
 
-# --- components: lazy-checkpoint convergence fold (one action per round) ------
+# --- components: observe() convergence fold (one action per round) ------------
 
 
 def test_components_converged_graph_exits_after_one_loop_round(spark):
     """r14 folds the convergence probe into the round's materialization
-    (lazy localCheckpoint consumed by the changed-count job — one driver
-    action per round instead of eager-checkpoint + isEmpty). Behavior
+    (an observe() changed-row metric riding the eager localCheckpoint's
+    one action, instead of eager-checkpoint + isEmpty). Behavior
     pin: a graph whose init aggregation already reaches the fixpoint
     (single edge) must run exactly ONE confirming loop round — the init
     (round 1) plus the round that observes changed == 0 — and the labels

@@ -128,7 +128,6 @@ def main() -> None:
             flush=True,
         )
 
-    os.makedirs(os.path.join(REPO, "plans", "r13"), exist_ok=True)
     rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14")
     os.makedirs(os.path.join(REPO, "plans", rnd), exist_ok=True)
     with open(os.path.join(REPO, "plans", rnd, "profile.json"), "w") as f:

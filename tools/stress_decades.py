@@ -175,9 +175,9 @@ def main() -> None:
     fs.build_full_replica()  # sf1.0full (reused 10× midpoint)
     build_decade_replica()
 
-    from tools.plan_hash import _registry_fns
+    from duckdb_nats_jetstream_spark.queries import full_registry
 
-    fns = _registry_fns(REPO)
+    fns = {name: fn for name, (fn, _sql) in full_registry().items()}
     names = [n for n in args.only.split(",") if n] or HEADLINES
 
     # borrow fullsweep's watchdogged runner on OUR port/timeout

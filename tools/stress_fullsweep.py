@@ -176,11 +176,9 @@ def main() -> None:
 
     build_full_replica()
 
-    # oracle SQL is irrelevant here — load builders without resolving
-    # the (expensive, duckdb-training) oracle callables
-    from tools.plan_hash import _registry_fns
+    from duckdb_nats_jetstream_spark.queries import full_registry
 
-    fns = _registry_fns(REPO)
+    fns = {name: fn for name, (fn, _sql) in full_registry().items()}
     names = [n for n in args.only.split(",") if n] or list(fns)
 
     spark = _sparkui.build_session("stress-fullsweep", UI_PORT)
