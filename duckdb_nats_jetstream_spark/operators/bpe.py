@@ -50,6 +50,7 @@ from duckdb_nats_jetstream_spark.functions.text import (
     sql_shingles,
     tokens,
 )
+from duckdb_nats_jetstream_spark.tables import cached, spread
 
 _SYMS = "regexp_extract_all(seq, '<([^>]*)>', 1)"
 
@@ -71,17 +72,29 @@ def _pair_counts(enc: DataFrame) -> DataFrame:
     )
 
 
+def _encoded_vocab(df: DataFrame, text_col: str) -> DataFrame:
+    """``(w, cnt, seq)`` — the character-encoded vocabulary every training
+    round reads; callers cache it around :func:`_learn_merges`."""
+    vocab = (
+        spread(df)
+        .select(F.explode(tokens(F.col(text_col))).alias("w"))
+        .filter((F.col("w") != "") & ~F.col("w").rlike("[<>]"))
+        .groupBy("w")
+        .agg(F.count("*").alias("cnt"))
+    )
+    return vocab.select("w", "cnt", _encode(F.col("w")).alias("seq"))
+
+
 def _learn_merges(
-    df: DataFrame, rounds: int, text_col: str
-) -> tuple[DataFrame, DataFrame, list[tuple[str, int]]]:
-    """Shared training core: returns ``(base, enc, merges)`` — the
-    PERSISTED character-encoded vocabulary ``base`` (caller must
-    unpersist), the post-merge encoded vocabulary ``enc`` (a lazy chain
-    of per-round replaces over ``base``) and the chosen ``(pair, n)``
-    merges in order.
+    base: DataFrame, rounds: int
+) -> tuple[DataFrame, list[tuple[str, int]]]:
+    """Shared training core over the cached vocabulary ``base`` from
+    :func:`_encoded_vocab`: returns ``(enc, merges)`` — the post-merge
+    encoded vocabulary ``enc`` (a lazy chain of per-round replaces over
+    ``base``) and the chosen ``(pair, n)`` merges in order.
 
     r13 optimization: the corpus-scale work is the ONE vocab aggregation,
-    persisted once. Each round's replace is a row-local string op over
+    cached once. Each round's replace is a row-local string op over
     that cached relation, so the per-round ``persist → count → unpersist
     parent`` lifecycle (one extra materialization job per round) is
     replaced by a lazy projection chain — round r's pair-count pass
@@ -97,17 +110,6 @@ def _learn_merges(
     to a few dozen rounds, but a large-rounds caller should
     re-materialize the chain every N rounds (localCheckpoint ``enc`` and
     continue from it) to cap both the replay and the codegen depth."""
-    from duckdb_nats_jetstream_spark.tables import spread
-
-    vocab = (
-        spread(df)
-        .select(F.explode(tokens(F.col(text_col))).alias("w"))
-        .filter((F.col("w") != "") & ~F.col("w").rlike("[<>]"))
-        .groupBy("w")
-        .agg(F.count("*").alias("cnt"))
-    )
-    base = vocab.select("w", "cnt", _encode(F.col("w")).alias("seq")).persist()
-
     enc = base
     merges: list[tuple[str, int]] = []
     for _ in range(rounds):
@@ -129,7 +131,7 @@ def _learn_merges(
                 F.col("seq"), F.lit(f"<{a}><{b}>"), F.lit(f"<{a}{b}>")
             ).alias("seq"),
         )
-    return base, enc, merges
+    return enc, merges
 
 
 def bpe_merge_table(
@@ -145,19 +147,19 @@ def bpe_merge_table(
 
     Scale: the vocab aggregation is the single corpus-scale shuffle; each
     round adds one hash agg + one map over the vocab relation and collects
-    exactly ONE row. ``enc`` is persisted per round (lineage would otherwise
-    re-run all prior rounds' replacements).
+    exactly ONE row.
     """
     spark = df.sparkSession
-    base, enc, merges = _learn_merges(df, rounds, text_col)
+    base = _encoded_vocab(df, text_col)
+    with cached(base):
+        enc, merges = _learn_merges(base, rounds)
+        frontier = (
+            _pair_counts(enc)
+            .orderBy(F.col("n").desc(), F.col("pair"))
+            .limit(top_k)
+            .collect()
+        )
     out_rows = [(r + 1, 1, pair, n) for r, (pair, n) in enumerate(merges)]
-    frontier = (
-        _pair_counts(enc)
-        .orderBy(F.col("n").desc(), F.col("pair"))
-        .limit(top_k)
-        .collect()
-    )
-    base.unpersist(blocking=True)
     out_rows += [
         (rounds + 1, i + 1, row.pair, row.n) for i, row in enumerate(frontier)
     ]
@@ -183,29 +185,27 @@ def bpe_token_counts(
     vocabulary relation (the deployment lookup) plus a per-doc hash agg —
     the merges never re-run over the corpus.
     """
-    from duckdb_nats_jetstream_spark.tables import spread
-
-    base, enc, _ = _learn_merges(df, rounds, text_col)
-    word_syms = enc.select(
-        "w",
-        F.size(F.expr(_SYMS)).cast("long").alias("n_syms"),
-        F.length("w").cast("long").alias("n_ch"),
-    )
-    exploded = spread(df).select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w")
-    ).filter((F.col("w") != "") & ~F.col("w").rlike("[<>]"))
-    out = (
-        exploded.join(word_syms, "w")
-        .groupBy(id_col)
-        .agg(
-            F.count("*").alias("n_words"),
-            F.sum("n_ch").alias("n_chars"),
-            F.sum("n_syms").alias("n_tokens"),
+    base = _encoded_vocab(df, text_col)
+    with cached(base):
+        enc, _ = _learn_merges(base, rounds)
+        word_syms = enc.select(
+            "w",
+            F.size(F.expr(_SYMS)).cast("long").alias("n_syms"),
+            F.length("w").cast("long").alias("n_ch"),
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    base.unpersist(blocking=True)
-    return out
+        exploded = spread(df).select(
+            F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w")
+        ).filter((F.col("w") != "") & ~F.col("w").rlike("[<>]"))
+        out = (
+            exploded.join(word_syms, "w")
+            .groupBy(id_col)
+            .agg(
+                F.count("*").alias("n_words"),
+                F.sum("n_ch").alias("n_chars"),
+                F.sum("n_syms").alias("n_tokens"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
 
 
 def _sql_merge_ctes(rounds: int, table: str, text_col: str) -> tuple[str, str]:

@@ -35,6 +35,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, functions as F
 
 from duckdb_nats_jetstream_spark.errors import BindError
+from duckdb_nats_jetstream_spark.tables import cached
 
 
 def connected_components(
@@ -88,23 +89,19 @@ def connected_components(
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     if not edges_unique:
         und = und.distinct()
-    und = und.persist()
-    # Init IS the first propagation round: every vertex appears as `a` in the
-    # undirected edge list, so min(self, direct neighbors) in one aggregation
-    # replaces the separate vertex-distinct job + one full loop iteration.
-    labels = (
-        und.groupBy(F.col("a").alias("id"))
-        .agg(F.least(F.first("a"), F.min("b")).alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-    try:
+    with cached(und):
+        # Init IS the first propagation round: every vertex appears as `a`
+        # in the undirected edge list, so min(self, direct neighbors) in one
+        # aggregation replaces the separate vertex-distinct job + one full
+        # loop iteration.
+        labels = (
+            und.groupBy(F.col("a").alias("id"))
+            .agg(F.least(F.first("a"), F.min("b")).alias("comp"))
+            .localCheckpoint(eager=True)
+        )
         if on_round is not None:
             on_round(1)  # the init aggregation IS the first propagation round
         labels = _propagate(und, labels, max_iter, skew_safe, on_round)
-    finally:
-        # a raising on_round callback (or any mid-loop failure) must not
-        # leak the persisted edge relation into the session cache manager
-        und.unpersist(blocking=True)
     return labels.select(F.col("id").alias(id_out), F.col("comp").alias(comp_out))
 
 

@@ -20,6 +20,7 @@ from duckdb_nats_jetstream_spark.functions.text import (
     shingles,
     tokens,
 )
+from duckdb_nats_jetstream_spark.tables import cached
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -131,7 +132,7 @@ def minhash_lsh_pairs(
     # cache the shingled docs: they feed the signature pipeline AND the two
     # candidate-verification joins — without this the whole tokenize+shingle
     # stage recomputes three times
-    docs = _with_shingles(df, text_col, id_col, n).persist()
+    docs = _with_shingles(df, text_col, id_col, n)
     # Shuffle only (id, band_key) through the self-join — never the shingle
     # arrays. Candidate pairs are few; their shingles come back via two
     # broadcast joins against the (small relative to the log) docs relation.
@@ -159,11 +160,8 @@ def minhash_lsh_pairs(
         .filter(F.col("jac") >= threshold)
         .select("id_a", "id_b", F.col("jac").alias("jaccard_r"))
     )
-    # release the shingle cache once the result is materialized; blocking=False
-    # so a consumer that hasn't run yet just recomputes
-    out = out.localCheckpoint(eager=True)
-    docs.unpersist(blocking=True)
-    return out
+    with cached(docs):
+        return out.localCheckpoint(eager=True)
 
 
 def ngram_jaccard_pairs(
@@ -469,10 +467,10 @@ def winnow_pairs(
         )
 
     # UNCAPPED opt-in (exhaustive oracle twin): the self-join needs the
-    # fingerprint relation on both sides — persist it so the whole
+    # fingerprint relation on both sides — cache it so the whole
     # k-gram/window pipeline doesn't run twice (same pattern as
     # minhash_lsh_pairs; on a cluster swap localCheckpoint for checkpoint)
-    fps_cached = winnow_fingerprints(df, text_col, id_col, k, w).persist()
+    fps_cached = winnow_fingerprints(df, text_col, id_col, k, w)
     a = fps_cached.alias("a")
     b = fps_cached.alias("b")
     out = (
@@ -488,9 +486,8 @@ def winnow_pairs(
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-    out = out.localCheckpoint(eager=True)
-    fps_cached.unpersist(blocking=True)
-    return out
+    with cached(fps_cached):
+        return out.localCheckpoint(eager=True)
 
 
 def embedding_near_dup_pairs(
@@ -623,7 +620,6 @@ def dup_span_stats(
             F.explode(shingles(tokens(F.col(text_col)), n)).alias("__s"),
         )
         .select(id_col, F.substring(F.md5("__s"), 1, 8).alias("fp"))
-        .persist()
     )
     # "appears in ≥2 DISTINCT docs" ⟺ min(id) < max(id): count_distinct
     # plans as TWO exchanges (partial distinct on (fp, id), then the merge),
@@ -649,9 +645,8 @@ def dup_span_stats(
             (F.col("n_dup_spans") / F.col("n_spans")).alias("dup_frac"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    grams.unpersist(blocking=True)
-    return out
+    with cached(grams):
+        return out.localCheckpoint(eager=True)
 
 
 def sql_dup_span_stats(n: int = 13, table: str = "documents") -> str:
@@ -785,25 +780,16 @@ def incremental_near_dups(
     """
     new_sh = _with_shingles(new_df, text_col, id_col, n)
     ref_sh = _with_shingles(ref_df, text_col, id_col, n)
-    new_sh.persist()
-    ref_sh.persist()
-    try:
-        out = _screen_against_reference(
-            new_sh,
-            _banded_signatures(new_sh, id_col, k, band_size),
-            ref_sh,
-            _banded_signatures(ref_sh, id_col, k, band_size),
-            id_col,
-            threshold,
-        )
+    out = _screen_against_reference(
+        new_sh,
+        _banded_signatures(new_sh, id_col, k, band_size),
+        ref_sh,
+        _banded_signatures(ref_sh, id_col, k, band_size),
+        id_col,
+        threshold,
+    )
+    with cached(new_sh, ref_sh):
         return out.localCheckpoint(eager=True)
-    finally:
-        # finally, not straight-line: an executor failure mid-screen must
-        # not leave two corpus-sized shingle relations pinned in executor
-        # storage for the session lifetime (cache-hygiene pattern; the
-        # stored twin below has always done it this way)
-        new_sh.unpersist(blocking=True)
-        ref_sh.unpersist(blocking=True)
 
 
 def _screen_against_reference(
@@ -903,19 +889,16 @@ def incremental_near_dups_stored(
     ``k``/``band_size``/``n`` must match the store build (they
     parameterize only the batch side here)."""
     new_sh = _with_shingles(new_df, text_col, id_col, n)
-    new_sh.persist()
-    try:
-        out = _screen_against_reference(
-            new_sh,
-            _banded_signatures(new_sh, id_col, k, band_size),
-            ref_shingles,
-            ref_bands,
-            id_col,
-            threshold,
-        )
+    out = _screen_against_reference(
+        new_sh,
+        _banded_signatures(new_sh, id_col, k, band_size),
+        ref_shingles,
+        ref_bands,
+        id_col,
+        threshold,
+    )
+    with cached(new_sh):
         return out.localCheckpoint(eager=True)
-    finally:
-        new_sh.unpersist(blocking=True)
 
 
 def sql_incremental_near_dups(
@@ -1004,7 +987,6 @@ def span_scrub(
         (F.col("__p0") + 1).alias("p"),  # 1-based gram start
         F.substring(F.md5("__s"), 1, 8).alias("fp"),
     )
-    grams = grams.persist()
     # min(id) < max(id) ⟺ ≥2 distinct docs — one exchange instead of the
     # distinct-agg's two (same rewrite as dup_span_stats; r13 optimization)
     hot = (
@@ -1035,9 +1017,8 @@ def span_scrub(
         (F.size("__t") - F.size(kept)).cast("long").alias("n_removed"),
         F.array_join(kept, " ").alias("scrubbed"),
     )
-    out = out.localCheckpoint(eager=True)
-    grams.unpersist(blocking=True)
-    return out
+    with cached(grams):
+        return out.localCheckpoint(eager=True)
 
 
 def sql_span_scrub(n: int = 13, table: str = "documents") -> str:

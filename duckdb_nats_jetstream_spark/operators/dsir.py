@@ -47,6 +47,7 @@ from duckdb_nats_jetstream_spark.functions.classifier import (
     sql_feature_bucket,
     sql_hashed_text_features,
 )
+from duckdb_nats_jetstream_spark.tables import cached
 
 
 def dsir_select(
@@ -89,12 +90,11 @@ def dsir_select(
     # bm25/domain_shift pattern): both consumers replanned the
     # explode+md5-hash subtree — two full feature-hash passes over the
     # text. ``db`` is a NARROW integer relation, far smaller than the
-    # text it derives from, so it is persisted once and the bounded
-    # top-k output eager-checkpointed so the cache drops before return
-    # († lifecycle). One feature-hash pass, two cheap cached passes.
+    # text it derives from, so it is cached once. One feature-hash pass,
+    # two cheap cached passes.
     db = fb.groupBy(id_col, "__t", "__b").agg(
         F.count(F.lit(1)).cast("long").alias("__c")
-    ).persist()
+    )
     # both sides' bucket LMs in ONE conditional aggregation (n_buckets
     # rows), totals in one more row — no per-side re-scans
     sc = db.groupBy("__b").agg(
@@ -136,9 +136,8 @@ def dsir_select(
         .orderBy(F.col("dsir_weight").desc(), F.col(id_col))
         .limit(topk)
     )
-    out = out.localCheckpoint(eager=True)
-    db.unpersist(blocking=True)
-    return out
+    with cached(db):
+        return out.localCheckpoint(eager=True)
 
 
 def sql_dsir_select(

@@ -33,6 +33,8 @@ from collections import defaultdict
 
 from pyspark.sql import DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark.tables import cached
+
 
 def exact_group_quantiles(
     df: DataFrame,
@@ -69,9 +71,8 @@ def exact_group_quantiles(
         .filter(F.col("v").isNotNull())
         .repartitionByRange(n_partitions, "g", "v")
         .sortWithinPartitions("g", "v")
-        .persist()
     )
-    try:
+    with cached(s):
         # pass 1: slice sizes. spark_partition_id is stable here because the
         # persisted partitioning is what both passes read. The limit bounds
         # what reaches the driver: with > max rows we see exactly max+1 and
@@ -145,8 +146,6 @@ def exact_group_quantiles(
         picked = s.mapInPandas(
             pick, f"g {dict(df.dtypes)[group_col]}, p_idx int, side string, v double"
         ).collect()
-    finally:
-        s.unpersist(blocking=True)
 
     vals = {(r.g, r.p_idx, r.side): r.v for r in picked}
     rows = []

@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 from duckdb_nats_jetstream_spark.errors import BindError
 from duckdb_nats_jetstream_spark.functions import text as TX
 from duckdb_nats_jetstream_spark.operators.similarity import sql_lit_f64
+from duckdb_nats_jetstream_spark.tables import cached
 
 __all__ = [
     "bm25_phrase_scored",
@@ -209,24 +210,21 @@ def _topk_from_base(
     side is a broadcast, so there is no exchange to reuse) — at corpus
     scale that is two full tokenize/tf passes over the text. ``base`` is
     a NARROW integer relation (id, dl, tf_0..n), far smaller than the
-    text it derives from, so persisting it turns BM25 into one text scan
+    text it derives from, so caching it turns BM25 into one text scan
     + two cheap cached passes.
 
-    Default lifecycle (``defer=None``): the bounded top-k output is
-    eager-checkpointed so the cache can be dropped before returning (the
-    package's † persist → localCheckpoint(eager) → unpersist lifecycle).
-    NOTE this makes the call execute EAGERLY at build time, and
-    localCheckpoint output is not recomputable on executor loss — on a
-    cluster with a checkpoint dir, swap for ``checkpoint`` (r13 ADVICE).
+    Default (``defer=None``): the bounded top-k output is eager-checkpointed
+    inside ``tables.cached(base)``. NOTE this makes the call execute
+    EAGERLY at build time, and localCheckpoint output is not recomputable
+    on executor loss — on a cluster with a checkpoint dir, swap for
+    ``checkpoint`` (r13 ADVICE).
 
     ``defer`` (r14): a caller fusing SEVERAL bounded candidate lists
-    passes a list; the base is appended to it UNPERSISTED and the top-k
-    plan is returned LAZY, so the caller can persist every deferred base
-    and materialize all branches in ONE action (independent subtrees
-    overlap inside a single job instead of serializing per-branch eager
-    checkpoints — guide §2.6), then unpersist them. Cache substitution
-    happens when a plan executes, so persisting after the plan is built
-    still reads the base from cache."""
+    passes a list; the base is appended to it and the top-k plan is
+    returned LAZY, so the caller can cache every deferred base and
+    materialize all branches in ONE action (independent subtrees overlap
+    inside a single job instead of serializing per-branch eager
+    checkpoints — guide §2.6)."""
     scored = _bm25_from_base(base, n_terms, k1, b, id_col)
     top = scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(topk)
     w = W.orderBy(F.col("score").desc(), F.col(id_col))
@@ -238,11 +236,8 @@ def _topk_from_base(
     if defer is not None:
         defer.append(base)
         return out
-    base.persist()
-    try:
+    with cached(base):
         return out.localCheckpoint(eager=True)
-    finally:
-        base.unpersist(blocking=True)
 
 
 def bm25_topk(

@@ -36,6 +36,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
+from duckdb_nats_jetstream_spark.tables import cached
+
 #: hash-prefix width (hex chars) used for the coarse threshold compare
 _PFX = 8
 _PFX_SPACE = 16 ** _PFX
@@ -147,7 +149,7 @@ def stratified_hash_topn(
     which scales with the data — past the cap the hints are dropped and
     the joins fall back to the planner's shuffle strategy instead of
     OOMing the driver (SCALING.md batch 8). The sizing probe is free
-    here: ``counts`` is persisted and consumed eagerly anyway."""
+    here: ``counts`` is cached and consumed eagerly anyway."""
     reserved = {"__h", "__gk", "__gcnt", "__thr", "__kept", rank_col}
     taken = reserved & set(df.columns)
     if taken:
@@ -186,53 +188,51 @@ def stratified_hash_topn(
     thr_hex = F.lpad(F.lower(F.conv(thr.cast("string"), 10, 16)), _PFX, "0")
     # cached: group-sized (one row per stratum), consumed by the survivor
     # join, the shortfall check, and the threshold projection — uncached,
-    # each consumer re-scans the corpus to re-count. Persist AFTER the
-    # __thr projection: persisting the pre-withColumn relation and then
-    # rebinding the name makes the final unpersist target the derived DF
-    # and leaks the original cache entry (the sweep test catches this).
-    counts = counts.withColumn("__thr", thr_hex).persist()
-    # realized stratum cardinality — the persist is materialized by the
-    # first consumer regardless, so counting it here only moves that job
-    # earlier; the count decides whether the group-sized sides stay
-    # broadcast-hinted (see max_broadcast_groups in the docstring)
-    hint = counts.count() <= max_broadcast_groups
+    # each consumer re-scans the corpus to re-count.
+    counts = counts.withColumn("__thr", thr_hex)
+    with cached(counts):
+        # realized stratum cardinality — the cache is materialized by the
+        # first consumer regardless, so counting it here only moves that
+        # job earlier; the count decides whether the group-sized sides
+        # stay broadcast-hinted (see max_broadcast_groups in the docstring)
+        hint = counts.count() <= max_broadcast_groups
 
-    def maybe_b(d: DataFrame) -> DataFrame:
-        # over the cap: pin merge — merely dropping the hint lets the
-        # static size estimate re-broadcast the side the count just
-        # proved huge (see operators/broadcast_guard docstring)
-        return F.broadcast(d) if hint else d.hint("merge")
+        def maybe_b(d: DataFrame) -> DataFrame:
+            # over the cap: pin merge — merely dropping the hint lets the
+            # static size estimate re-broadcast the side the count just
+            # proved huge (see operators/broadcast_guard docstring)
+            return F.broadcast(d) if hint else d.hint("merge")
 
-    survivors = hashed.join(maybe_b(counts), "__gk").filter(
-        F.substring("__h", 1, _PFX) <= F.col("__thr")
-    )
-    # cached: ≈ margin·n rows per group, consumed by the shortfall check
-    # and the final anti-join — uncached, the prefilter+window reruns twice
-    kept = ranked(survivors).persist()
-
-    # groups where the prefilter starved the quota (kept < min(n, count));
-    # anchored on `counts`, not `kept` — a fully-starved group has NO kept
-    # rows at all and must still be flagged (left join + coalesce 0)
-    shortfall = (
-        counts.join(
-            kept.groupBy("__gk").agg(F.count("*").alias("__kept")),
-            "__gk",
-            "left",
+        survivors = hashed.join(maybe_b(counts), "__gk").filter(
+            F.substring("__h", 1, _PFX) <= F.col("__thr")
         )
-        .filter(
-            F.coalesce(F.col("__kept"), F.lit(0).cast("long"))
-            < F.least(F.lit(n).cast("long"), F.col("__gcnt"))
+        # cached: ≈ margin·n rows per group, consumed by the shortfall
+        # check and the final anti-join — uncached, the prefilter+window
+        # reruns twice
+        kept = ranked(survivors)
+
+        # groups where the prefilter starved the quota (kept < min(n,
+        # count)); anchored on `counts`, not `kept` — a fully-starved group
+        # has NO kept rows at all and must still be flagged (left join +
+        # coalesce 0)
+        shortfall = (
+            counts.join(
+                kept.groupBy("__gk").agg(F.count("*").alias("__kept")),
+                "__gk",
+                "left",
+            )
+            .filter(
+                F.coalesce(F.col("__kept"), F.lit(0).cast("long"))
+                < F.least(F.lit(n).cast("long"), F.col("__gcnt"))
+            )
+            .select("__gk")
         )
-        .select("__gk")
-    )
-    ok = kept.join(maybe_b(shortfall), "__gk", "left_anti")
-    redo = ranked(hashed.join(maybe_b(shortfall), "__gk", "left_semi"))
-    out_cols = df.columns + [rank_col]
-    out = ok.select(out_cols).unionByName(redo.select(out_cols))
-    out = out.localCheckpoint(eager=True)
-    kept.unpersist(blocking=True)
-    counts.unpersist(blocking=True)
-    return out
+        ok = kept.join(maybe_b(shortfall), "__gk", "left_anti")
+        redo = ranked(hashed.join(maybe_b(shortfall), "__gk", "left_semi"))
+        out_cols = df.columns + [rank_col]
+        out = ok.select(out_cols).unionByName(redo.select(out_cols))
+        with cached(kept):
+            return out.localCheckpoint(eager=True)
 
 
 def quota_topk(

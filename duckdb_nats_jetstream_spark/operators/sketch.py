@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from duckdb_nats_jetstream_spark.functions.text import sql_norm, tokens
+from duckdb_nats_jetstream_spark.tables import cached
 
 
 def _cell(token_col: F.Column, d: int, width_hex: int) -> F.Column:
@@ -94,7 +95,6 @@ def countmin_estimates(
         df.select(F.explode(tokens(F.col(text_col))).alias("t"))
         .filter(F.col("t") != "")
     )
-    toks = toks.persist()
     sketch = _sketch_of(toks, depth, width_hex)
 
     exact = (
@@ -123,9 +123,8 @@ def countmin_estimates(
         .groupBy(F.col("t").alias("token"), "true_n")
         .agg(F.min("n").alias("est_n"))
     )
-    out = out.localCheckpoint(eager=True)
-    toks.unpersist(blocking=True)
-    return out
+    with cached(toks):
+        return out.localCheckpoint(eager=True)
 
 
 def sql_countmin_estimates(

@@ -32,8 +32,8 @@ def capture_checkpoint_plans():
     """Intercept ``DataFrame.localCheckpoint`` for the duration of one query
     build, recording each PRE-checkpoint physical plan (r04 verdict ask #4).
 
-    Eager-checkpoint queries (persist → localCheckpoint(eager) → unpersist)
-    return a DataFrame whose plan is a bare ``Scan ExistingRDD`` — the one
+    Eager-checkpoint queries (``localCheckpoint(eager)`` inside
+    ``tables.cached``) return a DataFrame whose plan is a bare ``Scan ExistingRDD`` — the one
     place a shuffle/cartesian/row-Python stage could hide from a plan audit
     that only explains the *returned* DataFrame. Hooking the checkpoint call
     itself captures every build plan per query with zero query-code changes;
@@ -217,10 +217,10 @@ def audit_row(plan: str) -> dict[str, int | bool]:
         "pushed": len(
             [m for m in re.findall(r"PushedFilters: \[([^\]]*)\]", plan) if m.strip()]
         ),
-        # eager-materialized queries (persist → localCheckpoint(eager) →
-        # unpersist cache-hygiene lifecycle): the returned DF scans the
-        # checkpointed RDD, so the build plan is invisible here — those
-        # queries' build plans are pinned by dedicated tests instead.
+        # eager-materialized queries (localCheckpoint(eager) inside
+        # tables.cached): the returned DF scans the checkpointed RDD, so
+        # the build plan is invisible here — those queries' build plans
+        # are pinned by dedicated tests instead.
         "eager": "Scan ExistingRDD" in plan,
     }
 
@@ -280,8 +280,8 @@ def render_md(rows: list[tuple[str, dict]]) -> str:
         "`text_token_frequency` (pure column ops).",
         "",
         "Rows marked `†(n)` materialize eagerly inside the query fn",
-        "(persist → localCheckpoint(eager) → unpersist — the cache-hygiene",
-        "lifecycle). Their counts now INCLUDE every pre-checkpoint build",
+        "(`localCheckpoint(eager)` inside `tables.cached`, which drops the",
+        "cache on any exit). Their counts now INCLUDE every pre-checkpoint build",
         "plan, captured per-query by hooking `localCheckpoint` AND `collect`",
         "during the audit (n = captured build plans; iterative checkpointers",
         "contribute one per round; bounded driver-side materializations —",

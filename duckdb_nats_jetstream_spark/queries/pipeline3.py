@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from duckdb_nats_jetstream_spark.functions import text as TX
 from duckdb_nats_jetstream_spark.operators import similarity as S
-from duckdb_nats_jetstream_spark.tables import read_table, spread
+from duckdb_nats_jetstream_spark.tables import cached, read_table, spread
 
 _TOKS = TX.sql_tokens("text")
 
@@ -948,13 +948,10 @@ def docs_domain_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = spread(read_table(spark, sf_dir, "documents")).select(
         "source", F.explode(TX.tokens(F.col("text"))).alias("token")
     )
-    # persisted (r13): three consumers below (corpus top-50, per-source
+    # cached (r13): three consumers below (corpus top-50, per-source
     # totals, the scoring join) each replanned the tokenize→explode→agg
-    # subtree — three corpus scans instead of one. † lifecycle: the
-    # per-source result is eager-checkpointed before unpersist.
-    st = (
-        tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("o")).persist()
-    )
+    # subtree — three corpus scans instead of one.
+    st = tok.groupBy("source", "token").agg(F.count(F.lit(1)).alias("o"))
     corpus = (
         st.groupBy("token")
         .agg(F.sum("o").alias("c"))
@@ -997,9 +994,8 @@ def docs_domain_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("src_total").cast("long").alias("n_tokens"),
         F.aggregate("xs", F.lit(0.0), term).alias("chi2"),
     )
-    out = out.localCheckpoint(eager=True)
-    st.unpersist(blocking=True)
-    return out
+    with cached(st):
+        return out.localCheckpoint(eager=True)
 
 
 DOMAIN_SHIFT_SQL = f"""

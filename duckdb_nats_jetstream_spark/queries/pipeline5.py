@@ -57,7 +57,7 @@ from duckdb_nats_jetstream_spark.functions import text as TX
 from duckdb_nats_jetstream_spark.operators import funnel as FN
 from duckdb_nats_jetstream_spark.operators import histsketch as HS
 from duckdb_nats_jetstream_spark.operators import hll as HLL
-from duckdb_nats_jetstream_spark.tables import read_table
+from duckdb_nats_jetstream_spark.tables import cached, read_table
 
 # --- unigram LM surprisal ----------------------------------------------------
 
@@ -90,7 +90,7 @@ def _unigram_bit_scores(tok: DataFrame) -> DataFrame:
     vocab via the join Catalyst picks (broadcast when the vocab estimate
     is small, SMJ co-keyed on token otherwise). One tokenize pass, zero
     token-keyed windows."""
-    dtc = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c")).persist()
+    dtc = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
     vocab = dtc.groupBy("token").agg(F.sum("c").alias("n"))
     total = vocab.agg(F.sum("n").alias("total"))
     bits = F.length(F.bin(F.expr("total div n"))) - 1
@@ -104,9 +104,8 @@ def _unigram_bit_scores(tok: DataFrame) -> DataFrame:
             F.sum(F.col("c") * F.col("bits")).cast("long").alias("bits_total"),
         )
     )
-    out = out.localCheckpoint(eager=True)
-    dtc.unpersist(blocking=True)
-    return out
+    with cached(dtc):
+        return out.localCheckpoint(eager=True)
 
 
 def text_unigram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -402,8 +401,8 @@ def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's duration: each is consumed 2-3× (self-as-join-side plus its
     own total), and without the cache every consumer re-tokenizes the
     corpus — 5 full scans at 100 TB instead of 2 (one per n-gram order).
-    Same persist → localCheckpoint(eager) → unpersist lifecycle as
-    ``winnow_pairs`` (cache-hygiene pinned by the registry sweep test)."""
+    Cached via ``tables.cached`` (cache-hygiene pinned by the registry
+    sweep test)."""
     docs = read_table(spark, sf_dir, "documents")
     toked = docs.select(TX.tokens(F.col("text")).alias("toks"))
     bigrams = F.when(
@@ -418,13 +417,11 @@ def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("b.x").alias("x"), F.col("b.y").alias("y"))
         .groupBy("x", "y")
         .agg(F.count(F.lit(1)).alias("cxy"))
-        .persist()
     )
     uni = (
         toked.select(F.explode("toks").alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
-        .persist()
     )
     n_uni = uni.agg(F.sum("c").alias("nu"))
     n_bi = bi.agg(F.sum("cxy").alias("nb"))
@@ -442,10 +439,8 @@ def text_pmi_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("lift").desc(), "x", "y")
         .limit(20)
     )
-    out = out.localCheckpoint(eager=True)
-    bi.unpersist(blocking=True)
-    uni.unpersist(blocking=True)
-    return out
+    with cached(bi, uni):
+        return out.localCheckpoint(eager=True)
 
 
 PMI_TOPK_SQL = f"""
@@ -750,7 +745,6 @@ def rel_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.col("o_orderstatus") == "F").alias("in_a"),
             F.max(F.col("o_orderstatus") == "O").alias("in_b"),
         )
-        .persist()
     )
     ka = KMV.kmv_sketch(ck.filter("in_a"), "o_custkey")
     kb = KMV.kmv_sketch(ck.filter("in_b"), "o_custkey")
@@ -770,9 +764,8 @@ def rel_kmv_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
             "exact_inter",
         )
     )
-    out = out.localCheckpoint(eager=True)
-    ck.unpersist(blocking=True)
-    return out
+    with cached(ck):
+        return out.localCheckpoint(eager=True)
 
 
 def _kmv_intersection_sql() -> str:
@@ -885,7 +878,6 @@ def scan_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("day", "register")
         .agg(F.max("rank").alias("max_rank"))
-        .persist()
     )
     # dense (day × observed-register) grid so a register seen on day 1 but
     # silent on day 3 still carries into day 3's cumulative sketch
@@ -914,9 +906,8 @@ def scan_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("exact_cum"),
     )
     out = est.join(exact, "day").orderBy("day")
-    out = out.localCheckpoint(eager=True)
-    daily.unpersist(blocking=True)
-    return out
+    with cached(daily):
+        return out.localCheckpoint(eager=True)
 
 
 def _cumulative_uniques_sql() -> str:

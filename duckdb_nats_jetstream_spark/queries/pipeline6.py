@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 from duckdb_nats_jetstream_spark.functions.vector import sql_dot
 from duckdb_nats_jetstream_spark.operators import retrieval as R
 from duckdb_nats_jetstream_spark.operators import similarity as S
-from duckdb_nats_jetstream_spark.tables import read_table
+from duckdb_nats_jetstream_spark.tables import cached, read_table
 
 #: One rare, discriminative term ('dup' marks the planted duplicate docs in
 #: the fixtures — high idf) plus two common terms; exercises both ends of
@@ -42,36 +42,20 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 BM25_TOPK_SQL = R.sql_bm25_topk(_QUERY_TERMS, topk=10)
 
 
-def _fused_checkpoint(fused, caches) -> DataFrame:
-    """Per-FUSION † lifecycle (r14, guide §2.6): persist every deferred
-    candidate base, materialize the fused top-k in ONE eager checkpoint —
-    the independent candidate subtrees overlap inside that single action
-    instead of serializing one eager checkpoint per branch — then drop the
-    caches on any exit. Nothing is persisted while the fusion is built, so
-    a failed build leaks no cache."""
-    for c in caches:
-        c.persist()
-    try:
-        return fused.localCheckpoint(eager=True)
-    finally:
-        for c in caches:
-            c.unpersist(blocking=True)
-
-
 def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+vector retrieval around document 0: RRF-fuse the
     BM25 top-100 (document 0 itself excluded — it is the query) with the
     exact cosine top-100 neighbors of vector 0, keep the fused top-10.
-    The BM25 leg defers its persist lifecycle to the fusion
-    (:func:`_fused_checkpoint`), so both candidate generators execute
-    inside one action."""
+    The BM25 leg defers its cache to the fusion, so both candidate
+    generators execute inside one eager checkpoint (r14, guide §2.6)."""
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") != 0)
     emb = read_table(spark, sf_dir, "embeddings")
     caches: list[DataFrame] = []
     lex = R.bm25_topk(docs, _QUERY_TERMS, topk=100, defer=caches)
     vec = S.cosine_topk(emb, query_max_id=1, k=100)
     fused = R.rrf_fuse(lex, vec, id_b="neighbor_id", rnk_b="rnk", topk=10)
-    return _fused_checkpoint(fused, caches)
+    with cached(*caches):
+        return fused.localCheckpoint(eager=True)
 
 
 _RRF = R.DEFAULT_RRF_K
@@ -137,7 +121,8 @@ def sim_hybrid_rrf3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         topk=10,
     )
-    return _fused_checkpoint(fused, caches)
+    with cached(*caches):
+        return fused.localCheckpoint(eager=True)
 
 
 HYBRID_RRF3_SQL = f"""
@@ -208,7 +193,8 @@ def sim_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         topk=10,
     )
-    return _fused_checkpoint(fused, caches)
+    with cached(*caches):
+        return fused.localCheckpoint(eager=True)
 
 
 def _hybrid_rrf_ann_sql() -> str:

@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark.tables import cached
+
 
 def dedup_messages(
     stream_df: DataFrame,
@@ -206,12 +208,8 @@ def near_dup_flagger(
         spark = batch_df.sparkSession
         if not batch_df.head(1):
             return
-        keys = _band_keys_df(batch_df, text_col, id_col, k, band_size, n).persist()
-        # unpersist in finally: _read_store deliberately PROPAGATES
-        # transient FS errors, and a throw between persist and unpersist
-        # would leak this batch's cached keys on every foreachBatch retry
-        # (r09 review — the persist/rebind leak class from the r07 notes)
-        try:
+        keys = _band_keys_df(batch_df, text_col, id_col, k, band_size, n)
+        with cached(keys):
             store = _read_store(spark, batch_id)
             if store is not None:
                 hits = (
@@ -247,8 +245,6 @@ def near_dup_flagger(
             # per-batch dirs → a replayed batch overwrites itself (idempotent)
             verdict.write.mode("overwrite").parquet(f"{out_dir}/batch_id={batch_id}")
             _write_store(spark, keys, batch_id)
-        finally:
-            keys.unpersist(blocking=True)
 
     return (
         stream_df.writeStream.foreachBatch(_process)

@@ -4,9 +4,25 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
+
+
+@contextlib.contextmanager
+def cached(*dfs):
+    """The † lifecycle: persist ``dfs`` for the duration of the block and
+    unpersist the same handles on any exit, so an error leaks no cache.
+    Cache substitution happens when a plan executes, so frames built from
+    ``dfs`` before the block still read the cache inside it."""
+    try:
+        for df in dfs:
+            df.persist()
+        yield
+    finally:
+        for df in dfs:
+            df.unpersist(blocking=True)
 
 
 def spread(df, partitions: int | None = None):

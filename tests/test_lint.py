@@ -17,7 +17,9 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
 - every ``.collect()`` site is PINNED per module: each existing site is
   bounded-by-construction (k-row top-k lists, per-iteration centroid
   pulls, vocabulary-bound BPE merges); a NEW site must be consciously
-  added here with the same justification, or it is presumed unbounded.
+  added here with the same justification, or it is presumed unbounded;
+- ``.persist(``/``.unpersist(`` appear only in ``tables.py``: every cache
+  goes through ``tables.cached``, which drops it on any exit.
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -143,3 +145,14 @@ def test_collect_sites_are_pinned():
         f"{_COLLECT_ALLOWLIST} — a new site is presumed UNBOUNDED until "
         "pinned here with a boundedness argument"
     )
+
+
+def test_persist_only_in_cached():
+    bad = [
+        f"{_rel(p)}:{i}"
+        for p in _py_files()
+        if _rel(p) != "tables.py"
+        for i, line in _code_lines(p)
+        if re.search(r"\.(un)?persist\(", line)
+    ]
+    assert not bad, f"cache outside tables.cached: {bad}"

@@ -93,6 +93,37 @@ def test_registry_wide_no_cartesian_sweep(spark, sf_dir):
     assert not leakers, f"queries leaking cache entries: {leakers}"
 
 
+@pytest.mark.parametrize(
+    "module,attr,query",
+    [
+        ("retrieval", "rrf_fuse", "sim_hybrid_rrf"),
+        ("retrieval", "rrf_fuse_many", "sim_hybrid_rrf3"),
+        ("retrieval", "rrf_fuse_many", "sim_hybrid_rrf_ann"),
+        ("dedup", "_banded_signatures", "dedup_minhash_lsh"),
+        ("sketch", "_sketch_of", "text_countmin_topk"),
+        ("bpe", "_pair_counts", "text_bpe_merges"),
+    ],
+)
+def test_build_error_leaks_no_cache(
+    spark, sf_dir, registry, monkeypatch, module, attr, query
+):
+    """A query build that raises where its cache would exist must leave no
+    cache behind — the sweep above only sees the successful paths."""
+    import importlib
+
+    def boom(*_args, **_kwargs):
+        raise RuntimeError("build failed")
+
+    mod = importlib.import_module(f"duckdb_nats_jetstream_spark.operators.{module}")
+    monkeypatch.setattr(mod, attr, boom)
+    with pytest.raises(RuntimeError, match="build failed"):
+        registry[query][0](spark, sf_dir)
+    cache_mgr = spark._jsparkSession.sharedState().cacheManager()
+    leaked = not cache_mgr.isEmpty()
+    cache_mgr.clearCache()  # keep one leaking row from failing the rest
+    assert not leaked, f"{query} leaked its cache when the build raised"
+
+
 def test_winnow_and_mixture_are_pure_jvm(spark, sf_dir):
     """Winnowing fingerprints and weighted mixture sampling are advertised
     as zero-Python column pipelines — pin that in the physical plan."""

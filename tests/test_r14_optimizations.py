@@ -147,6 +147,7 @@ def test_kmv_flagged_union_below_k_is_exact(spark):
 
 def test_bm25_topk_defer_matches_eager(spark):
     from duckdb_nats_jetstream_spark.operators.retrieval import bm25_topk
+    from duckdb_nats_jetstream_spark.tables import cached
 
     docs = spark.createDataFrame(
         [(i, f"term{i % 3} filler words here number{i}") for i in range(30)],
@@ -157,9 +158,8 @@ def test_bm25_topk_defer_matches_eager(spark):
     caches: list = []
     deferred = bm25_topk(docs, ["term0"], topk=5, defer=caches)
     assert len(caches) == 1, "deferred base cache must be handed back"
-    got = {tuple(r) for r in deferred.collect()}
-    for c in caches:
-        c.unpersist(blocking=True)
+    with cached(*caches):
+        got = {tuple(r) for r in deferred.collect()}
     assert got == eager and got
     # the deferred path must leave nothing behind once the caller cleans up
     jspark = spark._jsparkSession

@@ -365,27 +365,6 @@ def test_hybrid_rrf_ann_query_shape(spark, sf_dir):
     assert all(r.ann_rnk is None or 1 <= r.ann_rnk <= 100 for r in out)
 
 
-@pytest.mark.parametrize(
-    "query,fuse",
-    [
-        ("sim_hybrid_rrf", "rrf_fuse"),
-        ("sim_hybrid_rrf3", "rrf_fuse_many"),
-        ("sim_hybrid_rrf_ann", "rrf_fuse_many"),
-    ],
-)
-def test_hybrid_fusion_error_leaks_no_cache(spark, sf_dir, monkeypatch, query, fuse):
-    """A fusion build that raises must leave no cache behind."""
-    from duckdb_nats_jetstream_spark.queries import pipeline6
-
-    def boom(*_args, **_kwargs):
-        raise RuntimeError("fusion build failed")
-
-    monkeypatch.setattr(R, fuse, boom)
-    with pytest.raises(RuntimeError, match="fusion build failed"):
-        getattr(pipeline6, query)(spark, sf_dir)
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-
-
 def test_contrastive_triplets_semantics(spark):
     """Triplet generation: positive = best SAME-label neighbor (anchor
     excluded), negatives = top-k different-label, NULL labels excluded on

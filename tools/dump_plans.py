@@ -7,8 +7,8 @@ Writes ``plans/$SPARK_GRAFT_PLANS_ROUND/<query>_<tag>.txt`` (round dir
 defaults to ``r14``) — the committed evidence for every plan-shape claim
 in the round's OPTIMIZATION report (the judge cannot run Spark).
 
-Eager-materializing queries (persist → localCheckpoint(eager) → unpersist)
-execute during ``fn()``; for those the formatted plan of the RETURNED frame
+Eager-materializing queries (``localCheckpoint(eager)`` inside
+``tables.cached``) execute during ``fn()``; for those the formatted plan of the RETURNED frame
 is just a scan of checkpointed blocks, so intermediates are captured with
 the SAME hook the plan audit uses (`plans.audit.capture_checkpoint_plans`),
 formatted-mode, one section per materialization.
