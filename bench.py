@@ -73,8 +73,8 @@ def warm_up(spark, sf_dir: str) -> None:
     parquet footers + data pages for every table, the shuffle machinery,
     whole-stage codegen, and the FULL Python worker pool (first mapInPandas
     otherwise costs whichever query alphabetically happens to hit it first
-    ~1-2s). Shared with tools/adjudicate_bench.py so steady-state evidence
-    and the official number warm identically."""
+    ~1-2s). Shared with tools/profile_queries.py so per-query profiles and
+    the official number warm identically."""
     from pyspark.sql import functions as F
 
     from duckdb_nats_jetstream_spark.tables import read_table

@@ -19,7 +19,10 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
   pulls, vocabulary-bound BPE merges); a NEW site must be consciously
   added here with the same justification, or it is presumed unbounded;
 - ``.persist(``/``.unpersist(`` appear only in ``tables.py``: every cache
-  goes through ``tables.cached``, which drops it on any exit.
+  goes through ``tables.cached``, which drops it on any exit;
+- the tools, tests and ``bench.py`` measure only through the event log
+  (``tools/profile_queries.py``): no ``statusTracker``, live-UI REST or
+  UI-port code.
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -32,10 +35,8 @@ import ast
 import os
 import re
 
-PKG = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "duckdb_nats_jetstream_spark",
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "duckdb_nats_jetstream_spark")
 
 
 def _py_files():
@@ -156,3 +157,19 @@ def test_persist_only_in_cached():
         if re.search(r"\.(un)?persist\(", line)
     ]
     assert not bad, f"cache outside tables.cached: {bad}"
+
+
+def test_tools_have_one_instrument():
+    paths = [os.path.join(REPO, "bench.py")] + [
+        os.path.join(REPO, d, f)
+        for d in ("tools", "tests")
+        for f in sorted(os.listdir(os.path.join(REPO, d)))
+        if f.endswith(".py") and f != "test_lint.py"
+    ]
+    bad = [
+        f"{os.path.relpath(p, REPO)}:{i}"
+        for p in paths
+        for i, line in _code_lines(p)
+        if re.search(r"statusTracker|/api/v1/|spark\.ui\.port|_sparkui", line)
+    ]
+    assert not bad, f"second profiling instrument (use the event log): {bad}"

@@ -3,6 +3,7 @@ same log — melted stage rows vs (user, t1..tk) columns, bit-for-bit."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -20,6 +21,31 @@ def log_dir(tmp_path_factory, sf_dir):
     d = tmp_path_factory.mktemp("funnel_log")
     shutil.copy(f"{sf_dir}/events.parquet", d / "part-000.parquet")
     return str(d)
+
+
+def pin_chunk_mtimes(d: str) -> None:
+    """Give each *.parquet chunk in ``d`` a distinct, increasing mtime (in
+    name order). Spark's file stream source orders files by modification
+    time; same-second writes tie and can replay chunks out of order —
+    an observed flake in every replay-log harness. A chunk may be a flat
+    file OR a Spark-written ``*.parquet`` DIRECTORY; for directories the
+    pin must land on the PART FILES inside (the source lists leaves, so
+    utime on the directory itself is a silent no-op — and part files
+    within one chunk share its mtime, which is why chunk writers should
+    also coalesce(1))."""
+    k = 0
+    for f in sorted(os.listdir(d)):
+        if not f.endswith(".parquet"):
+            continue
+        path = os.path.join(d, f)
+        mt = (1_700_000_000 + k * 10,) * 2
+        if os.path.isdir(path):
+            for root, _dirs, files in os.walk(path):
+                for leaf in files:
+                    os.utime(os.path.join(root, leaf), mt)
+        else:
+            os.utime(path, mt)
+        k += 1
 
 
 def _events_schema(spark, log_dir):
@@ -130,8 +156,6 @@ def test_streaming_funnel_idle_timeout_evicts_and_restarts(spark, tmp_path):
         # hour 3: user 1 returns with the stage-2 event type only
         [(1, t(3, 1), "click")],
     ]
-    from tools._sparkui import pin_chunk_mtimes
-
     for i, rows in enumerate(chunks):
         cdir = d / f"c{i}.parquet"
         # coalesce(1): one part file per chunk. Multiple part files share
@@ -185,8 +209,6 @@ def test_streaming_funnel_ttl_timers_survive_checkpoint_resume(spark, tmp_path):
     evict, and their later return must still restart at stage 0 (same
     semantics as the uninterrupted drain in the test above)."""
     import datetime as dt
-
-    from tools._sparkui import pin_chunk_mtimes
 
     d = tmp_path / "log"
     d.mkdir()

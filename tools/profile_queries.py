@@ -1,43 +1,154 @@
-"""Per-query cost decomposition for the r13 optimization round.
+"""The one profiling instrument of ``tools/``: Spark's event log.
 
-For each named query (default: the full registry in bench order) measure,
-under the SAME session + warm-up as ``bench.py``:
+Every tool measures the same way:
 
-- ``build_s``    — DataFrame construction time (``fn(spark, sf_dir)``):
-                   driver-side Python + any eager inner actions the query
-                   function runs (codebook fits, dial sizing, RM3 collects).
-- ``analysis_s`` — first ``df.schema`` touch (catalyst analysis).
-- ``exec_first`` / ``exec_min`` — first and min-of-3 noop-sink executions
-                   of a FRESHLY re-built DataFrame each time (bench
-                   methodology: cold plan, warm session).
-- ``n_jobs`` / ``n_stages`` / ``n_tasks`` — Spark jobs/stages/tasks of one
-                   full build+execute pass, via a per-query job group.
+1. ``enable_event_log()`` before the JVM starts, so the session logs every
+   job, stage and task to a temp dir;
+2. ``measure(spark, group, run)`` around each measured call, so its jobs
+   carry a job group and a hung call is cancelled;
+3. ``group_records(log_dir)`` after ``spark.stop()`` has flushed the log:
+   one record per job group, read with ``perfbench/eventlog.py``.
 
-The job/stage counts identify queries whose wall time is fixed scheduling
-overhead (many tiny jobs: broadcasts, inner collects) vs real compute —
-guide §1's "decide whether the time is scheduler delay or work" for a
-173-query registry where the UI is disabled.
+Run as a script, it profiles registry queries at sf0.1 under the same
+session and warm-up as ``bench.py``. Each query runs once, under two job
+groups: ``<name>:build`` is ``fn(spark, sf_dir)`` (driver-side Python plus
+any eager materializations and bounded collects the query function runs),
+``<name>:exec`` is one noop-sink execution of the returned frame.
 
-    python tools/profile_queries.py [--top N | name ...]
+    python tools/profile_queries.py [name ...]
 
-Writes ``plans/$SPARK_GRAFT_PLANS_ROUND/profile.json`` (default r14)
-and prints a sorted table.
+Writes ``plans/$SPARK_GRAFT_PLANS_ROUND/profile.json`` (default r15) and
+prints a table sorted by build + exec wall.
 """
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shlex
+import shutil
+import statistics
 import sys
+import tempfile
+import threading
 import time
+from collections import defaultdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+
+from perfbench.eventlog import GroupStats, group_stats, read_events  # noqa: E402
+
+#: per-call wall cap: a call that runs past it has its job group cancelled
+#: and reports err="timeout" — a hang is a finding, not a stalled tool
+TIMEOUT_S = 240
+
+_PYTHON_KEYS = ("run_ms", "bytes_sent", "bytes_returned")
+
+
+def enable_event_log() -> str:
+    """Turn Spark's event log on for the session this process starts next,
+    writing to a fresh temp dir (removed at exit), and return that dir.
+    Must run before the JVM starts: it goes through
+    ``PYSPARK_SUBMIT_ARGS``, as ``perfbench/run.py`` does."""
+    log_dir = tempfile.mkdtemp(prefix="spark-events-")
+    atexit.register(shutil.rmtree, log_dir, True)
+    submit = ["--conf", "spark.eventLog.enabled=true",
+              "--conf", f"spark.eventLog.dir=file://{log_dir}"]
+    rest = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = f"{shlex.join(submit)} {rest}"
+    return log_dir
+
+
+def measure(spark, group: str, run):
+    """Call ``run()`` with every Spark job it starts filed under job group
+    ``group``. Returns ``(value, {"wall_s", "err"})``; ``value`` is None
+    and ``err`` is set when ``run`` raises. A call still running after
+    ``TIMEOUT_S`` has its jobs cancelled (interrupting their tasks) and
+    reports ``err == "timeout"``. The watchdog only reaches Spark jobs: a
+    driver-side Python loop that never starts one is not interrupted."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, interruptOnCancel=True)
+    timed_out = threading.Event()
+
+    def _cancel():
+        timed_out.set()
+        sc.cancelJobGroup(group)
+
+    timer = threading.Timer(TIMEOUT_S, _cancel)
+    timer.start()
+    value, err = None, None
+    t0 = time.perf_counter()
+    try:
+        value = run()
+    except Exception as exc:  # noqa: BLE001 — per-call isolation
+        err = "timeout" if timed_out.is_set() else f"{type(exc).__name__}: {exc}"[:300]
+    finally:
+        wall = time.perf_counter() - t0
+        timer.cancel()
+        sc.setJobGroup("", "")
+    return value, {"wall_s": round(wall, 3), "err": err}
+
+
+def _max_task_peak_mem(events: list[dict]) -> dict[str, int]:
+    """Per job group, the largest ``Peak Execution Memory`` of any one
+    task. (The live UI's stage ``peakExecutionMemory`` is the SUM over the
+    stage's tasks, not this.) Stage ids restart in every application."""
+    stage_group: dict[int, str] = {}
+    peak: dict[str, int] = defaultdict(int)
+    for ev in events:
+        kind = ev.get("Event")
+        if kind == "SparkListenerApplicationStart":
+            stage_group = {}
+        elif kind == "SparkListenerJobStart":
+            group = (ev.get("Properties") or {}).get("spark.jobGroup.id") or ""
+            stage_group.update(dict.fromkeys(ev.get("Stage IDs", []), group))
+        elif kind == "SparkListenerTaskEnd":
+            mem = (ev.get("Task Metrics") or {}).get("Peak Execution Memory")
+            g = stage_group.get(ev["Stage ID"], "")
+            peak[g] = max(peak[g], int(mem or 0))
+    return peak
+
+
+def _record(s: GroupStats, max_task_peak_mem: int) -> dict:
+    return {
+        "jobs": s.jobs,
+        "stages": s.stages,
+        "tasks": s.tasks,
+        "task_run_s": round(s.task_run_ms / 1e3, 3),
+        "gc_s": round(s.gc_ms / 1e3, 3),
+        "shuffle_write_bytes": s.shuffle_write_bytes,
+        "spill_bytes": s.spill_bytes,
+        "records_read": s.records_read,
+        "max_task_peak_mem_bytes": max_task_peak_mem,
+        "skew": round(s.skew(), 2),
+        "python": {k: s.python.get(k, 0) for k in _PYTHON_KEYS},
+        # per stage: task count and median/max task duration (launch to finish)
+        "stage_tasks": {
+            str(sid): {"tasks": len(ts), "median_ms": statistics.median(ts),
+                       "max_ms": max(ts)}
+            for sid, ts in sorted(s.stage_tasks.items())
+        },
+    }
+
+
+#: the record of a group that started no job
+EMPTY = _record(GroupStats(), 0)
+
+
+def group_records(log_dir: str) -> dict[str, dict]:
+    """One record per job group of the event log under ``log_dir``. Read
+    it after ``spark.stop()``: only then is the log complete."""
+    events = read_events(log_dir)
+    peak = _max_task_peak_mem(events)
+    return {g: _record(s, peak.get(g, 0)) for g, s in group_stats(events).items()}
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
+    log_dir = enable_event_log()
 
     import bench
 
@@ -47,91 +158,58 @@ def main() -> None:
     spark = get_spark("profile-queries")
     spark.sparkContext.setLogLevel("ERROR")
     registry = full_registry()
-
-    args = sys.argv[1:]
-    if args and args[0] == "--top":
-        n = int(args[1])
-        with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
-            detail = json.load(f)["queries"]
-
-        def t(v):
-            return v["spark_s"] if isinstance(v, dict) else v
-
-        names = [
-            k
-            for k, _ in sorted(detail.items(), key=lambda kv: -t(kv[1]))
-            if k in registry
-        ][:n]
-    elif args:
-        names = args
-    else:
-        names = sorted(registry)
+    names = sys.argv[1:] or sorted(registry)
 
     bench.warm_up(spark, sf_dir)
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    out: dict[str, dict] = {}
+    walls: dict[str, dict] = {}
     for name in names:
         fn, _sql = registry[name]
-        group = f"profile:{name}"
-        sc.setJobGroup(group, name)
-        try:
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            t1 = time.perf_counter()
-            _ = df.schema
-            t2 = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            t3 = time.perf_counter()
-        except Exception as e:  # noqa: BLE001 — isolate per query
-            out[name] = {"error": f"{type(e).__name__}: {e}"[:300]}
-            continue
-        finally:
-            sc.setJobGroup("", "")
+        df, build = measure(spark, f"{name}:build", lambda: fn(spark, sf_dir))
+        exe = {"wall_s": 0.0, "err": "build failed"}
+        if build["err"] is None:
+            _, exe = measure(
+                spark,
+                f"{name}:exec",
+                lambda: df.write.mode("overwrite").format("noop").save(),
+            )
+        walls[name] = {"build": build, "exec": exe}
+        err = build["err"] or exe["err"]
+        print(f"{name}: build {build['wall_s']}s exec {exe['wall_s']}s"
+              f"{' ERR ' + err if err else ''}", file=sys.stderr, flush=True)
+    spark.stop()
 
-        job_ids = tracker.getJobIdsForGroup(group)
-        n_stages = n_tasks = 0
-        for jid in job_ids:
-            ji = tracker.getJobInfo(jid)
-            if ji is None:
-                continue
-            for sid in ji.stageIds:
-                si = tracker.getStageInfo(sid)
-                if si is not None and si.numTasks > 0 and si.numCompletedTasks > 0:
-                    n_stages += 1
-                    n_tasks += si.numTasks
-
-        execs = [t3 - t2]
-        for _ in range(2):
-            df = fn(spark, sf_dir)
-            t0b = time.perf_counter()
-            df.write.mode("overwrite").format("noop").save()
-            execs.append(time.perf_counter() - t0b)
-
-        out[name] = {
-            "build_s": round(t1 - t0, 3),
-            "analysis_s": round(t2 - t1, 3),
-            "exec_first": round(execs[0], 3),
-            "exec_min": round(min(execs), 3),
-            "total_first": round(t3 - t0, 3),
-            "n_jobs": len(job_ids),
-            "n_stages": n_stages,
-            "n_tasks": n_tasks,
+    records = group_records(log_dir)
+    out = {
+        name: {
+            phase: {**w, **records.get(f"{name}:{phase}", EMPTY)}
+            for phase, w in walls[name].items()
         }
-        r = out[name]
-        print(
-            f"{name:35s} build {r['build_s']:6.3f} ana {r['analysis_s']:6.3f}"
-            f" exec1 {r['exec_first']:6.3f} execmin {r['exec_min']:6.3f}"
-            f" jobs {r['n_jobs']:3d} stages {r['n_stages']:3d}"
-            f" tasks {r['n_tasks']:5d}",
-            flush=True,
-        )
+        for name in names
+    }
 
-    rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14")
+    rnd = os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15")
     os.makedirs(os.path.join(REPO, "plans", rnd), exist_ok=True)
     with open(os.path.join(REPO, "plans", rnd, "profile.json"), "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
+        f.write("\n")
+
+    print(f"{'query':35s} {'build_s':>8s} {'exec_s':>7s} {'jobs b+e':>8s}"
+          f" {'stages':>6s} {'tasks':>6s} {'task_s':>7s} {'shufMB':>7s}"
+          f" {'memMB':>6s} {'skew':>5s} {'pyrun_s':>7s}")
+    for name in sorted(out, key=lambda n: -(out[n]["build"]["wall_s"] + out[n]["exec"]["wall_s"])):
+        b, e = out[name]["build"], out[name]["exec"]
+        err = b["err"] or e["err"]
+        print(
+            f"{name:35s} {b['wall_s']:8.3f} {e['wall_s']:7.3f}"
+            f" {b['jobs']:>3d}+{e['jobs']:<4d} {b['stages'] + e['stages']:6d}"
+            f" {b['tasks'] + e['tasks']:6d} {b['task_run_s'] + e['task_run_s']:7.2f}"
+            f" {(b['shuffle_write_bytes'] + e['shuffle_write_bytes']) / 1e6:7.1f}"
+            f" {max(b['max_task_peak_mem_bytes'], e['max_task_peak_mem_bytes']) / 1e6:6.1f}"
+            f" {max(b['skew'], e['skew']):5.1f}"
+            f" {(b['python']['run_ms'] + e['python']['run_ms']) / 1e3:7.2f}"
+            f"{'  ERR ' + err if err else ''}"
+        )
     print(f"wrote plans/{rnd}/profile.json ({len(out)} queries)")
 
 

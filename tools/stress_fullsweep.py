@@ -6,7 +6,8 @@ superlinear query OUTSIDE the measured families was the likeliest
 undiscovered scale defect (the uncapped-winnow exponent 1.90 was only
 found by exactly this kind of sweep). This tool runs EVERY registry
 query once at sf0.1 and once at a 10× replica and reports wall /
-shuffle-write / peak-task-memory / exponent per query.
+shuffle-write / largest single-task peak execution memory / exponent per
+query, measured through ``profile_queries.measure`` and the event log.
 
 Replica (``.stress/sf1.0full/``): extends ``stress_scale``'s
 documents/embeddings/events replication (reused via symlink) with the
@@ -34,29 +35,28 @@ Run:  python tools/stress_fullsweep.py [--only name1,name2]
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import math
 import os
 import sys
-import threading
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools import _sparkui  # noqa: E402
 from tools import stress_scale  # noqa: E402
+from tools.profile_queries import (  # noqa: E402
+    EMPTY,
+    enable_event_log,
+    group_records,
+    measure,
+)
 
 SRC_DIR = stress_scale.SRC_DIR
 FULL_DIR = os.path.join(REPO, ".stress", "sf1.0full")
 REPLICAS = stress_scale.REPLICAS
 KEY_OFF = 10_000_000
-UI_PORT = 4078
 OUT_JSON = os.path.join(REPO, ".stress", "FULLSWEEP.json")
-
-#: per-(query, scale) wall cap — the heaviest known sf1 wall is ~15 s;
-#: anything hitting this cap is a finding in itself
-TIMEOUT_S = 240
 
 SKIP = {
     "dedup_winnow": "uncapped oracle form; must not scale past the "
@@ -120,109 +120,82 @@ def build_full_replica() -> None:
     print(f"built {FULL_DIR}", file=sys.stderr)
 
 
-def run_one(spark, fn, name: str, sf_dir: str) -> dict:
-    """One timed noop-sink run with a job-group watchdog: a query that
-    blows TIMEOUT_S gets its jobs cancelled and reports err=timeout —
-    a hang must surface as a finding, not stall the sweep."""
-    sc = spark.sparkContext
-    group = f"sweep-{name}"
-    sc.setJobGroup(group, name, interruptOnCancel=True)
-    timed_out = threading.Event()
-
-    def _watchdog():
-        timed_out.set()
-        sc.cancelJobGroup(group)
-
-    timer = threading.Timer(TIMEOUT_S, _watchdog)
-    timer.start()
-    before = set(
-        (st["stageId"], st["attemptId"])
-        for st in _sparkui.completed_stages(UI_PORT)
-    )
-    t0 = time.perf_counter()
-    try:
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        wall = time.perf_counter() - t0
-        err = None
-    except Exception as exc:  # noqa: BLE001 — per-query isolation
-        wall = time.perf_counter() - t0
-        err = "timeout" if timed_out.is_set() else f"{type(exc).__name__}: {exc}"[:160]
-    finally:
-        timer.cancel()
-        sc.setJobGroup("", "")
-    new = [
-        st
-        for st in _sparkui.completed_stages(UI_PORT)
-        if (st["stageId"], st["attemptId"]) not in before
-    ]
-    return {
-        "wall_s": round(wall, 2),
-        "shuffle_write_mb": round(
-            sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 1
-        ),
-        "peak_task_mem_mb": round(
-            max((s.get("peakExecutionMemory", 0) for s in new), default=0)
-            / 1e6,
-            1,
-        ),
-        "err": err,
-    }
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--only", default="", help="comma-separated subset")
     args = ap.parse_args()
 
     build_full_replica()
+    log_dir = enable_event_log()
 
     from duckdb_nats_jetstream_spark.queries import full_registry
+    from duckdb_nats_jetstream_spark.session import get_spark
+    from duckdb_nats_jetstream_spark.tables import read_table
 
     fns = {name: fn for name, (fn, _sql) in full_registry().items()}
     names = [n for n in args.only.split(",") if n] or list(fns)
 
-    spark = _sparkui.build_session("stress-fullsweep", UI_PORT)
+    spark = get_spark("stress-fullsweep")
     spark.sparkContext.setLogLevel("ERROR")
-    from duckdb_nats_jetstream_spark.tables import read_table
-
     read_table(spark, SRC_DIR, "documents").count()  # warm workers
+
+    seq = itertools.count()
+
+    def run(name: str, sf_dir: str) -> dict:
+        """One noop-sink run; its job group names the record to read back."""
+        group = f"{name}@{os.path.basename(sf_dir)}#{next(seq)}"
+        _, r = measure(
+            spark,
+            group,
+            lambda: fns[name](spark, sf_dir).write.mode("overwrite").format("noop").save(),
+        )
+        return {"group": group, **r}
+
+    def _exp(a, b):
+        if a["err"] or b["err"]:
+            return None
+        return round(
+            math.log10(max(b["wall_s"], 0.05) / max(a["wall_s"], 0.05)), 2
+        )
 
     results: dict[str, dict] = {}
     for i, name in enumerate(names):
         if name in SKIP:
             results[name] = {"skipped": SKIP[name]}
             continue
-        r1 = run_one(spark, fns[name], name, SRC_DIR)
-        r10 = run_one(spark, fns[name], name, FULL_DIR)
-
-        def _exp(a, b):
-            if a["err"] or b["err"]:
-                return None
-            return round(
-                math.log10(max(b["wall_s"], 0.05) / max(a["wall_s"], 0.05)), 2
-            )
-
+        r1 = run(name, SRC_DIR)
+        r10 = run(name, FULL_DIR)
         exp = _exp(r1, r10)
         if exp is not None and exp > 0.8:
             # suspect: the 1× run may have absorbed cold-start (codegen,
             # python workers) — warm re-measure both sides, keep the min,
             # so only genuine growth crosses the 1.2 flag
-            rb1 = run_one(spark, fns[name], name, SRC_DIR)
+            rb1 = run(name, SRC_DIR)
             if not rb1["err"] and rb1["wall_s"] < r1["wall_s"]:
                 r1 = rb1
-            rb10 = run_one(spark, fns[name], name, FULL_DIR)
+            rb10 = run(name, FULL_DIR)
             if not rb10["err"] and rb10["wall_s"] < r10["wall_s"]:
                 r10 = rb10
             exp = _exp(r1, r10)
         results[name] = {"sf0.1": r1, "sf1.0": r10, "exponent": exp}
         flag = " <<<" if exp is not None and exp > 1.2 else ""
+        err = r1["err"] or r10["err"]
         print(
             f"[{i + 1}/{len(names)}] {name}: {r1['wall_s']}s -> "
-            f"{r10['wall_s']}s exp={exp}"
-            f"{' ERR ' + str(r1['err'] or r10['err']) if (r1['err'] or r10['err']) else ''}"
-            f"{flag}",
+            f"{r10['wall_s']}s exp={exp}{' ERR ' + err if err else ''}{flag}",
             file=sys.stderr,
         )
+    spark.stop()  # flushes the event log
+
+    records = group_records(log_dir)
+    for r in results.values():
+        for key in ("sf0.1", "sf1.0"):
+            if key in r:
+                rec = records.get(r[key].pop("group"), EMPTY)
+                r[key]["shuffle_write_mb"] = round(rec["shuffle_write_bytes"] / 1e6, 1)
+                r[key]["max_task_peak_mem_mb"] = round(
+                    rec["max_task_peak_mem_bytes"] / 1e6, 1
+                )
 
     os.makedirs(os.path.dirname(OUT_JSON), exist_ok=True)
     with open(OUT_JSON, "w", encoding="utf-8") as fh:
@@ -247,16 +220,15 @@ def main() -> None:
     for n, r in errs.items():
         print(f"  ERR {n}: {r['sf0.1']['err'] or r['sf1.0']['err']}")
 
-    print("\n| query | sf0.1 wall | sf1.0 wall | exp | shuffle MB 0.1→1.0 | peak mem MB 0.1→1.0 |")
+    print("\n| query | sf0.1 wall | sf1.0 wall | exp | shuffle MB 0.1→1.0 | max task peak mem MB 0.1→1.0 |")
     print("|---|---|---|---|---|---|")
     for n in sorted(swept, key=lambda k: -(swept[k]["exponent"] or 0)):
         r1, r10 = swept[n]["sf0.1"], swept[n]["sf1.0"]
         print(
             f"| {n} | {r1['wall_s']} | {r10['wall_s']} | {swept[n]['exponent']} "
             f"| {r1['shuffle_write_mb']}→{r10['shuffle_write_mb']} "
-            f"| {r1['peak_task_mem_mb']}→{r10['peak_task_mem_mb']} |"
+            f"| {r1['max_task_peak_mem_mb']}→{r10['max_task_peak_mem_mb']} |"
         )
-    spark.stop()  # non-daemon JVM threads otherwise outlive main()
 
 
 if __name__ == "__main__":

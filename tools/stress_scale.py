@@ -1,47 +1,33 @@
-"""Off-bench 10× scale stress for the heavy dedup family (r03 verdict #7).
+"""The 10× ``documents``/``embeddings``/``events`` replica (r03 verdict #7).
 
-The 100 TB claims in SCALING.md are plan-shape arguments; this script adds
-a measured datapoint: it replicates the sf0.1 ``documents`` table 10×
-(≈ sf1.0 — each replica gets a distinct doc_id range and a one-token text
-perturbation so the near-dup structure scales with the corpus instead of
-collapsing to exact copies), runs the four heaviest registry queries at
-both scales, and reports wall time, total shuffle write bytes, and peak
-single-task execution memory per run (from the Spark UI REST API), plus
-the sf0.1→sf1.0 scaling exponent  log10(t_10x / t_1x).
+Replicates the sf0.1 ``documents`` table 10× (≈ sf1.0 — each replica gets
+a distinct doc_id range and a one-token text perturbation so the near-dup
+structure scales with the corpus instead of collapsing to exact copies),
+plus ``embeddings`` and ``events``; every other table is symlinked at 1×.
 
-An exponent ≈ 1 means linear scaling (the plan-shape claim); ≥ 2 means a
-quadratic term survived into the physical plan. Peak task memory growing
-~10× would mean some per-key state is corpus-proportional (a spill/OOM
-risk at 1000 executors); staying flat means partition-local working sets.
+``stress_fullsweep.py`` (which adds the TPC-H tables on top) and
+``stress_winnow_default.py`` measure on it. The heavy dedup family that
+this module used to sweep on its own is measured with
 
-Scaled data lives under ``/root/repo/.stress/`` (gitignored, regenerated
-on demand; /root/testdata is read-only).
+    python tools/stress_fullsweep.py --only docs_span_scrub,dedup_components,docs_chunk_dedup
 
-Run:  python tools/stress_scale.py   (~3-5 min)  → paste table into
-SCALING.md.
+(``dedup_winnow``, the uncapped oracle form, stays in that harness's
+``SKIP``: it must never run past the oracle fixtures.)
+
+Scaled data lives under ``.stress/`` in the checkout (gitignored,
+regenerated on demand).
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, REPO)
-
-from tools import _sparkui  # noqa: E402 — needs REPO on sys.path
 
 SRC_DIR = "/root/testdata/sf0.1"
 STRESS_DIR = os.path.join(REPO, ".stress", "sf1.0")
 REPLICAS = 10
-UI_PORT = 4077
-
-HEAVY = os.environ.get(
-    "SPARK_GRAFT_STRESS_QUERIES",
-    "dedup_winnow,docs_span_scrub,dedup_components,docs_chunk_dedup",
-).split(",")
 
 
 def build_scaled_documents() -> None:
@@ -128,65 +114,3 @@ def build_scaled_documents() -> None:
     os.rename(tmp_dir, STRESS_DIR)
     print(f"built {STRESS_DIR}: {REPLICAS}x replicas", file=sys.stderr)
 
-
-def _stages() -> dict[tuple[int, int], dict]:
-    return {
-        (st["stageId"], st["attemptId"]): st
-        for st in _sparkui.completed_stages(UI_PORT)
-    }
-
-
-def run_one(spark, name: str, sf_dir: str) -> dict:
-    from duckdb_nats_jetstream_spark.queries import full_registry
-
-    fn, _sql = full_registry()[name]
-    before = set(_stages())
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-    wall = time.perf_counter() - t0
-    after = _stages()
-    new = [v for k, v in after.items() if k not in before]
-    return {
-        "wall_s": round(wall, 2),
-        "shuffle_write_mb": round(
-            sum(s.get("shuffleWriteBytes", 0) for s in new) / 1e6, 1
-        ),
-        "peak_task_mem_mb": round(
-            max((s.get("peakExecutionMemory", 0) for s in new), default=0) / 1e6,
-            1,
-        ),
-        "n_stages": len(new),
-    }
-
-
-def main() -> None:
-    build_scaled_documents()
-
-    spark = _sparkui.build_session("stress-scale", UI_PORT)
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm codegen/python workers so the 1x runs aren't charged for startup
-    from duckdb_nats_jetstream_spark.tables import read_table
-
-    read_table(spark, SRC_DIR, "documents").count()
-
-    rows = []
-    for name in HEAVY:
-        r1 = run_one(spark, name, SRC_DIR)
-        r10 = run_one(spark, name, STRESS_DIR)
-        exp = math.log10(max(r10["wall_s"], 0.01) / max(r1["wall_s"], 0.01))
-        rows.append((name, r1, r10, round(exp, 2)))
-        print(f"{name}: 1x {r1}  10x {r10}  exponent {exp:.2f}", file=sys.stderr)
-
-    print("\n| query | sf0.1 wall | sf1.0 wall | exponent | shuffle MB 0.1→1.0 | peak task mem MB 0.1→1.0 |")
-    print("|---|---|---|---|---|---|")
-    for name, r1, r10, exp in rows:
-        print(
-            f"| {name} | {r1['wall_s']}s | {r10['wall_s']}s | {exp} "
-            f"| {r1['shuffle_write_mb']}→{r10['shuffle_write_mb']} "
-            f"| {r1['peak_task_mem_mb']}→{r10['peak_task_mem_mb']} |"
-        )
-
-
-if __name__ == "__main__":
-    main()

@@ -8,8 +8,9 @@ the hot user) concentrates the hot key in ONE reducer task no matter how
 many executors exist. This harness builds a 100× events table where 90% of
 all rows belong to a single user, runs the three verdict-named queries at
 uniform-100× and skewed-100×, and reports per-run wall time plus the
-max/median task runtime of the heaviest stage — the direct measurement of
-"is one straggler task doing all the work".
+max/median task duration of the stage with the slowest task — the direct
+measurement of "is one straggler task doing all the work" — measured
+through ``profile_queries.measure`` and the event log.
 
 Expected shapes (the hypotheses this measures):
 - ``scan_salted_agg``   — two-phase salted aggregation: flat max/median.
@@ -31,12 +32,16 @@ from __future__ import annotations
 import os
 import shutil
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tools import _sparkui  # noqa: E402 — needs REPO on sys.path
+from tools.profile_queries import (  # noqa: E402
+    EMPTY,
+    enable_event_log,
+    group_records,
+    measure,
+)
 
 SRC_DIR = "/root/testdata/sf0.1"
 UNIFORM_DIR = os.path.join(REPO, ".stress", "uniform100")
@@ -46,7 +51,6 @@ SKEW_DIR = os.path.join(REPO, ".stress", "skew100")
 #: user's ~9M rows vs a ~3k-row median partition measurable.
 REPLICAS = 100
 HOT_FRACTION = 0.9  # 90% of rows land on user_id = 1
-UI_PORT = 4078
 
 QUERIES = [
     q
@@ -113,14 +117,6 @@ def _build_events(out_dir: str, skewed: bool) -> None:
           file=sys.stderr)
 
 
-def _stage_ids() -> set[tuple[int, int]]:
-    return _sparkui.stage_ids(UI_PORT)
-
-
-def _task_skew(stage_id: int, attempt: int) -> tuple[float, float]:
-    return _sparkui.task_skew(UI_PORT, stage_id, attempt)
-
-
 def run_one(spark, name: str, sf_dir: str) -> dict:
     from duckdb_nats_jetstream_spark.queries import full_registry
 
@@ -133,27 +129,30 @@ def run_one(spark, name: str, sf_dir: str) -> dict:
 
 
 def _measure(spark, build_df, label: str) -> dict:
-    """Wall + worst-stage task med/max for one materialization."""
-    before = _stage_ids()
-    t0 = time.perf_counter()
-    build_df().write.mode("overwrite").format("noop").save()
-    wall = time.perf_counter() - t0
-    worst_med, worst_max = 0.0, 0.0
-    for sid, att in _stage_ids() - before:
-        try:
-            med, mx = _task_skew(sid, att)
-        except Exception:  # noqa: BLE001 — tiny stages may lack summaries
-            continue
-        if mx > worst_max:
-            worst_med, worst_max = med, mx
-    out = {
-        "wall_s": round(wall, 2),
-        "task_med_s": round(worst_med, 2),
-        "task_max_s": round(worst_max, 2),
-        "straggler_x": round(worst_max / worst_med, 1) if worst_med > 0 else None,
+    """Time one noop-sink materialization under job group ``label``;
+    its task durations are read back from the event log by ``_result``."""
+    _, r = measure(
+        spark, label, lambda: build_df().write.mode("overwrite").format("noop").save()
+    )
+    print(f"{label}: {r}", file=sys.stderr)
+    return {"group": label, **r}
+
+
+def _result(records: dict[str, dict], run: dict) -> dict:
+    """Wall + median/max task seconds of the stage whose slowest task is
+    the slowest — the straggler signal for one materialization."""
+    worst = max(
+        records.get(run["group"], EMPTY)["stage_tasks"].values(),
+        key=lambda st: st["max_ms"],
+        default={"median_ms": 0, "max_ms": 0},
+    )
+    med, mx = worst["median_ms"] / 1e3, worst["max_ms"] / 1e3
+    return {
+        "wall_s": round(run["wall_s"], 2),
+        "task_med_s": round(med, 2),
+        "task_max_s": round(mx, 2),
+        "straggler_x": round(mx / med, 1) if med > 0 else None,
     }
-    print(f"{label}: {out}", file=sys.stderr)
-    return out
 
 
 def run_join_variant(
@@ -234,25 +233,39 @@ def run_join_variant(
 def main() -> None:
     _build_events(UNIFORM_DIR, skewed=False)
     _build_events(SKEW_DIR, skewed=True)
+    log_dir = enable_event_log()
 
-    spark = _sparkui.build_session("stress-skew", UI_PORT)
-    spark.sparkContext.setLogLevel("ERROR")
-
+    from duckdb_nats_jetstream_spark.session import get_spark
     from duckdb_nats_jetstream_spark.tables import read_table
 
+    spark = get_spark("stress-skew")
+    spark.sparkContext.setLogLevel("ERROR")
     read_table(spark, UNIFORM_DIR, "events").count()  # warm
 
-    rows = []
-    for name in QUERIES:
-        ru = run_one(spark, name, UNIFORM_DIR)
-        rs = run_one(spark, name, SKEW_DIR)
-        rows.append((name, ru, rs))
-        print(f"{name}: uniform {ru}  skewed {rs}", file=sys.stderr)
+    rows = [
+        (name, run_one(spark, name, UNIFORM_DIR), run_one(spark, name, SKEW_DIR))
+        for name in QUERIES
+    ]
+    joins = []
+    if RUN_JOIN:
+        joins = [
+            ("uniform-100×, AQE skewJoin on",
+             run_join_variant(spark, UNIFORM_DIR, skew_join_on=True)),
+            ("skew-100×, AQE skewJoin OFF",
+             run_join_variant(spark, SKEW_DIR, skew_join_on=False)),
+            ("skew-100×, AQE skewJoin on",
+             run_join_variant(spark, SKEW_DIR, skew_join_on=True)),
+            ("skew-100×, skewJoin on, agg under join (rule no-ops)",
+             run_join_variant(spark, SKEW_DIR, skew_join_on=True, agg_under_join=True)),
+        ]
+    spark.stop()  # flushes the event log
+    records = group_records(log_dir)
 
-    if QUERIES:
+    if rows:
         print("\n| query | uniform-100× wall | skew-100× wall | uniform task med/max | skew task med/max | skew straggler× |")
         print("|---|---|---|---|---|---|")
-        for name, ru, rs in rows:
+        for name, u, k in rows:
+            ru, rs = _result(records, u), _result(records, k)
             print(
                 f"| {name} | {ru['wall_s']}s | {rs['wall_s']}s "
                 f"| {ru['task_med_s']}/{ru['task_max_s']}s "
@@ -260,21 +273,11 @@ def main() -> None:
                 f"| {rs['straggler_x']} |"
             )
 
-    if RUN_JOIN:
-        ju = run_join_variant(spark, UNIFORM_DIR, skew_join_on=True)
-        joff = run_join_variant(spark, SKEW_DIR, skew_join_on=False)
-        jon = run_join_variant(spark, SKEW_DIR, skew_join_on=True)
-        jagg = run_join_variant(
-            spark, SKEW_DIR, skew_join_on=True, agg_under_join=True
-        )
+    if joins:
         print("\n| sort-merge equi-join (broadcast off) | wall | task med/max | straggler× |")
         print("|---|---|---|---|")
-        for label, j in (
-            ("uniform-100×, AQE skewJoin on", ju),
-            ("skew-100×, AQE skewJoin OFF", joff),
-            ("skew-100×, AQE skewJoin on", jon),
-            ("skew-100×, skewJoin on, agg under join (rule no-ops)", jagg),
-        ):
+        for label, run in joins:
+            j = _result(records, run)
             print(
                 f"| {label} | {j['wall_s']}s "
                 f"| {j['task_med_s']}/{j['task_max_s']}s "
