@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from duckdb_nats_jetstream_spark.session import scoped_conf
+
 
 def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -43,14 +45,10 @@ def assert_wholestage_codegen(build_fn, spark) -> None:
     """``build_fn() -> DataFrame``; asserted with AQE off, because under AQE
     the codegen spans only materialize inside runtime query stages and never
     appear in the top-level plan string."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, "spark.sql.adaptive.enabled", "false"):
         plan = physical_plan(build_fn())
-        # codegen'd operators are prefixed "*(id)" in the plan string
-        assert "*(" in plan, f"no whole-stage codegen:\n{plan}"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    # codegen'd operators are prefixed "*(id)" in the plan string
+    assert "*(" in plan, f"no whole-stage codegen:\n{plan}"
 
 
 def assert_read_schema_pruned(df: DataFrame, must_not_contain: list[str]) -> None:

@@ -31,41 +31,21 @@ Scale notes baked into each writer:
 from __future__ import annotations
 
 import os
-import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
 from duckdb_nats_jetstream_spark.errors import BindError
+from duckdb_nats_jetstream_spark.session import scoped_conf
 
 _TS_CONF = "spark.sql.parquet.outputTimestampType"
-_TS_LOCK = threading.Lock()
-#: per-session pin bookkeeping: id(session) -> [depth, saved_value].
-#: Per-SESSION, not process-global: structured streaming runs foreachBatch
-#: on a CLONED session with its own conf, so a global depth counter would
-#: let a micro-batch ride a pin held on a DIFFERENT session and silently
-#: write INT96 (the exact defect this module exists to prevent), and the
-#: last writer out would restore the other session's saved value onto its
-#: own. Entries are deleted at depth 0, so id() reuse cannot alias: a live
-#: entry pins its session alive through the writer's reference.
-_TS_STATE: dict[int, list] = {}
 
 
-@contextmanager
 def _prunable_timestamps(spark):
     """Pin INT64-µs timestamp encoding around a write, restoring the
     caller's session conf after — see the module docstring for why INT96
     (the Spark default) silently disables row-group pruning downstream.
-
-    Overlapping sink writes ON THE SAME SESSION (e.g. two threads sharing
-    one session) must not each save/restore independently — a naive save
-    would capture the OTHER writer's pinned value as "previous" and leave
-    the session clobbered. A PER-SESSION depth counter serializes the
-    bookkeeping: the outermost entry saves the caller's value, the
-    outermost exit restores it. Sessions are tracked individually because
-    streaming ``foreachBatch`` hands each query a CLONED session with its
-    own conf — a process-global counter would let a micro-batch ride a
-    pin held on a different session and write INT96 unpinned.
+    Overlapping writes on one session and foreachBatch's cloned sessions
+    are handled by :func:`session.scoped_conf`.
 
     Cross-writer effect (r07 ADVICE, accepted as documented): the conf is
     session-global, so an unrelated THIRD-PARTY parquet write issued from
@@ -75,30 +55,7 @@ def _prunable_timestamps(spark):
     it is observable in the written footers. Deployments that need INT96
     for a legacy reader should serialize such writes around these sinks —
     or pin the conf at session build, which makes the window moot."""
-    key = id(spark)
-    with _TS_LOCK:
-        state = _TS_STATE.get(key)
-        if state is None:
-            try:
-                prev = spark.conf.get(_TS_CONF)
-            except Exception:
-                prev = None
-            spark.conf.set(_TS_CONF, "TIMESTAMP_MICROS")
-            _TS_STATE[key] = [1, prev]
-        else:
-            state[0] += 1
-    try:
-        yield
-    finally:
-        with _TS_LOCK:
-            state = _TS_STATE[key]
-            state[0] -= 1
-            if state[0] == 0:
-                del _TS_STATE[key]
-                if state[1] is None:
-                    spark.conf.unset(_TS_CONF)
-                else:
-                    spark.conf.set(_TS_CONF, state[1])
+    return scoped_conf(spark, _TS_CONF, "TIMESTAMP_MICROS")
 
 
 def write_partitioned_parquet(

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from duckdb_nats_jetstream_spark.session import scoped_conf
 from duckdb_nats_jetstream_spark.tables import cached
 
 
@@ -190,19 +191,11 @@ def near_dup_flagger(
         # replay-idempotent append: dynamic partition overwrite replaces
         # ONLY this batch's partition (plain append would double-insert a
         # replayed batch; saveAsTable-overwrite would drop the table)
-        conf = "spark.sql.sources.partitionOverwriteMode"
-        prev = spark.conf.get(conf, None)
-        spark.conf.set(conf, "dynamic")
-        try:
+        with scoped_conf(spark, "spark.sql.sources.partitionOverwriteMode", "dynamic"):
             cols = spark.table(store_table).columns  # positional contract
             tagged.select(*cols).write.mode("overwrite").insertInto(
                 store_table
             )
-        finally:
-            if prev is None:
-                spark.conf.unset(conf)
-            else:
-                spark.conf.set(conf, prev)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

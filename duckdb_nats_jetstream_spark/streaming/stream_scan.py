@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from duckdb_nats_jetstream_spark.functions.json_extract import json_extract
+from duckdb_nats_jetstream_spark.session import scoped_conf
 
 def _events_raw_ts_type(log_dir: str) -> T.DataType:
     """Inspect one parquet file to learn the stored ts flavor — streaming
@@ -138,10 +139,16 @@ def windowed_message_counts(
     )
 
 
+#: bound on :func:`run_to_completion`'s wait for its query to drain; a
+#: query still running after it is stopped and the call raises
+RUN_TIMEOUT_S = 600
+
+
 def run_to_completion(stream_df: DataFrame, checkpoint_dir: str, mode: str = "append"):
     """Drain all currently-available input through a memory sink
     (trigger=availableNow) and return the collected rows. Test/utility
-    harness for the streaming path."""
+    harness for the streaming path. Raises ``TimeoutError`` (after stopping
+    the query) if the drain takes longer than ``RUN_TIMEOUT_S``."""
     import uuid
 
     name = "sink_" + uuid.uuid4().hex[:8]
@@ -153,7 +160,11 @@ def run_to_completion(stream_df: DataFrame, checkpoint_dir: str, mode: str = "ap
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    if not q.awaitTermination(RUN_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"run_to_completion: query {name} still running after {RUN_TIMEOUT_S}s"
+        )
     return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
 
 
@@ -178,6 +189,22 @@ def continuous_rollup_sink(
     partition would silently drop that window's unchanged keys. At scale
     this is one small file per touched group per batch, never a table
     rewrite.
+
+    One invocation runs one micro-batch per batch of new files, and each
+    batch's plan runs once: the query starts with
+    ``spark.sql.streaming.noDataMicroBatches.enabled=false`` (scoped to the
+    ``start()`` call, which clones the session conf), so ``availableNow``
+    starts no batch without new input. Consequences:
+
+    - late rows are judged against the watermark the previous data batch
+      ran with, so the watermark one data batch moves drops late rows from
+      the data batch after next;
+    - expired state, and any rows a custom stateful input emits on
+      event-time timeouts, are handled by the next invocation's data
+      batch, in its own commit — an invocation with no new file runs no
+      batch at all;
+    - a batch whose update is empty (every row behind the watermark)
+      overwrites no partition, so it writes nothing.
     """
 
     if "__p" in windowed_df.columns:
@@ -190,8 +217,6 @@ def continuous_rollup_sink(
         )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         (
             batch_df.withColumn("__p", F.col(partition_col).cast("long"))
             .write.mode("overwrite")
@@ -200,19 +225,27 @@ def continuous_rollup_sink(
             .parquet(out_dir)
         )
 
-    return (
+    writer = (
         windowed_df.writeStream.foreachBatch(_write)
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
     )
+    with scoped_conf(
+        windowed_df.sparkSession, "spark.sql.streaming.noDataMicroBatches.enabled", "false"
+    ):
+        return writer.start()
 
 
 def read_rollup(spark, out_dir: str) -> DataFrame:
     """Read a :func:`continuous_rollup_sink` table (the derived ``__p``
-    partition key dropped; ``key_cols`` read back from partition dirs)."""
-    return spark.read.parquet(out_dir).drop("__p")
+    partition key dropped; ``key_cols`` read back from partition dirs).
+
+    Key columns read back as STRINGS, exactly as written into the directory
+    names: partition-type inference is off for the read, because it would
+    turn a string key ``007`` into the int 7."""
+    with scoped_conf(spark, "spark.sql.sources.partitionColumnTypeInference.enabled", "false"):
+        return spark.read.parquet(out_dir).drop("__p")
 
 
 def parquet_sink(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):

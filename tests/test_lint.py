@@ -22,7 +22,10 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
   goes through ``tables.cached``, which drops it on any exit;
 - the tools, tests and ``bench.py`` measure only through the event log
   (``tools/profile_queries.py``): no ``statusTracker``, live-UI REST or
-  UI-port code.
+  UI-port code;
+- a session conf is changed for a scope only through
+  ``session.scoped_conf``: no other function puts back a value it saved
+  with ``.conf.get`` or calls ``.conf.unset``.
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -173,3 +176,44 @@ def test_tools_have_one_instrument():
         if re.search(r"statusTracker|/api/v1/|spark\.ui\.port|_sparkui", line)
     ]
     assert not bad, f"second profiling instrument (use the event log): {bad}"
+
+
+def _conf_call(node, method: str) -> bool:
+    """``<x>.conf.<method>(...)``"""
+    return (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == method
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+    )
+
+
+def test_conf_restore_only_in_scoped_conf():
+    """A hand-rolled save/restore is a function that restores a session
+    conf: it unsets a key, or sets one back to a value it read with
+    ``.conf.get``. Only ``session.scoped_conf`` may — it is depth-counted
+    per session, so overlapping scopes restore the caller's value."""
+    bad = set()
+    for p in _py_files():
+        with open(p, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if (_rel(p), fn.name) == ("session.py", "scoped_conf"):
+                continue
+            saved = {
+                t.id
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Assign) and _conf_call(n.value, "get")
+                for t in n.targets
+                if isinstance(t, ast.Name)
+            }
+            for n in ast.walk(fn):
+                if _conf_call(n, "unset") or (
+                    _conf_call(n, "set")
+                    and any(isinstance(a, ast.Name) and a.id in saved for a in n.args[1:])
+                ):
+                    bad.add(f"{_rel(p)}:{n.lineno}")
+    assert not bad, f"session conf restored outside scoped_conf: {sorted(bad)}"

@@ -202,3 +202,43 @@ def test_prunable_timestamps_reentrant_restore(spark):
         # inner exit must NOT restore yet
         assert spark.conf.get(conf_key) == "TIMESTAMP_MICROS"
     assert spark.conf.get(conf_key) == prev
+
+
+def test_scoped_conf_threads_and_conflict(spark):
+    """Overlapping scopes from more threads than cores: every body sees the
+    scoped value (a premature restore by another thread's exit would break
+    it), and the last exit unsets the key that was unset before. A scope
+    asking for a different value while one is open raises."""
+    import sys
+    import threading
+
+    from duckdb_nats_jetstream_spark.session import scoped_conf
+
+    key = "spark.graft.test.scoped"
+    seen: list[str | None] = []
+
+    def worker():
+        for _ in range(25):
+            with scoped_conf(spark, key, "on"):
+                seen.append(spark.conf.get(key, None))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=worker) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == ["on"] * 200
+    assert spark.conf.get(key, None) is None
+
+    with scoped_conf(spark, key, "on"):
+        with pytest.raises(ValueError, match="already scoped"):
+            with scoped_conf(spark, key, "off"):
+                pass
+        assert spark.conf.get(key, None) == "on"
+    assert spark.conf.get(key, None) is None

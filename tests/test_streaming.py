@@ -106,3 +106,25 @@ def test_checkpoint_resume_no_duplicates(spark, sf_dir, log_dir, tmp_path):
     q2.awaitTermination()
     n2 = spark.read.parquet(out).count()
     assert n1 > 0 and n2 == n1  # nothing re-emitted on resume
+
+
+def test_run_to_completion_wait_is_bounded(spark, log_dir, tmp_path, monkeypatch):
+    """A drain that outlives ``RUN_TIMEOUT_S`` is stopped and raises,
+    instead of blocking its caller forever."""
+    import time
+
+    from duckdb_nats_jetstream_spark.streaming import stream_scan
+
+    def slow(batches):
+        for b in batches:
+            time.sleep(30)
+            yield b
+
+    stream = message_stream(spark, log_dir)
+    monkeypatch.setattr(stream_scan, "RUN_TIMEOUT_S", 2)
+    t0 = time.perf_counter()
+    with pytest.raises(TimeoutError, match="2s"):
+        run_to_completion(stream.mapInPandas(slow, stream.schema), str(tmp_path / "ck"))
+    assert time.perf_counter() - t0 < 25  # stopped, not drained
+    # run_to_completion names its memory sinks sink_<hex>
+    assert not [q for q in spark.streams.active if (q.name or "").startswith("sink_")]
