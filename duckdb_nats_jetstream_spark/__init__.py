@@ -12,10 +12,16 @@ Layout
 - ``operators``  : deduplication, similarity search, multimodal plumbing.
 - ``streaming``  : Structured Streaming equivalents (watermarks, windows).
 - ``plans``      : plan-inspection helpers (pushdown / broadcast assertions).
+- ``worker``     : a per-task start-up cost of PySpark Python workers,
+                   removed when the package is imported inside one.
 
 Reference parity notes cite ``/root/reference`` as ``ref:file:line``.
 """
 
 __version__ = "0.1.0"
 
+from duckdb_nats_jetstream_spark import worker as _worker
 from duckdb_nats_jetstream_spark.session import get_spark  # noqa: F401
+
+if _worker.applies():
+    _worker.install()

@@ -81,20 +81,22 @@ def _unigram_bit_scores(tok: DataFrame) -> DataFrame:
     traded a *broadcast probe* for a full exchange of every (doc, token)
     row on ``token``, a stopword-skewed key whose hottest group one window
     task must buffer (a §2.5 straggler/spill hazard at corpus scale; the
-    r13 driver also measured it 29 % slower locally). Now the narrow
-    (doc_id, token, c) relation is persisted ONCE († lifecycle — the
-    caller-facing result is eager-checkpointed and the cache dropped
-    before return), the vocab is a hash aggregate over the cache with
+    r13 benchmark also measured it 29 % slower locally). Now the vocab is a
+    hash aggregate over the narrow (doc_id, token, c) relation with
     map-side partial aggregation (the skew-proof reduction), the corpus
     total derives from the ≤|vocab|-row aggregate, and scoring probes the
     vocab via the join Catalyst picks (broadcast when the vocab estimate
-    is small, SMJ co-keyed on token otherwise). One tokenize pass, zero
-    token-keyed windows."""
+    is small, SMJ co-keyed on token otherwise). The plan is returned lazy:
+    the (doc_id, token, c) aggregate feeds both the scoring join and the
+    vocab, and exchange reuse shuffles it once (``ReusedExchange``, pinned
+    in tests/test_plans.py) — no cache, no eager checkpoint, no Spark job
+    while the query is built. One tokenize pass, zero token-keyed
+    windows."""
     dtc = tok.groupBy("doc_id", "token").agg(F.count("*").alias("c"))
     vocab = dtc.groupBy("token").agg(F.sum("c").alias("n"))
     total = vocab.agg(F.sum("n").alias("total"))
     bits = F.length(F.bin(F.expr("total div n"))) - 1
-    out = (
+    return (
         dtc.join(vocab, "token")
         .crossJoin(F.broadcast(total))
         .select("doc_id", "c", bits.cast("long").alias("bits"))
@@ -104,8 +106,6 @@ def _unigram_bit_scores(tok: DataFrame) -> DataFrame:
             F.sum(F.col("c") * F.col("bits")).cast("long").alias("bits_total"),
         )
     )
-    with cached(dtc):
-        return out.localCheckpoint(eager=True)
 
 
 def text_unigram_bits(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,9 +511,17 @@ def docs_curation_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bits_total").cast("double") / F.col("n_tokens").cast("double")
         ).alias("mean_bits"),
     )
+    # The md5 join is the oracle's inner join on doc_id, written null-safe
+    # against a side with NULL ids removed (same rows). An inner `=` join
+    # would infer isnotnull(doc_id) and push it into the scoring side's
+    # (doc_id, token) aggregate only — not into the vocabulary's copy — and
+    # the two copies would no longer be one exchange to reuse.
+    md5s = scrub.filter(F.col("doc_id").isNotNull()).select(
+        F.col("doc_id").alias("md5_doc_id"), F.md5("scrubbed").alias("content_md5")
+    )
     return (
         scored.filter((F.col("mean_bits") >= 1.5) & (F.col("mean_bits") <= 9.0))
-        .join(scrub.select("doc_id", F.md5("scrubbed").alias("content_md5")), "doc_id")
+        .join(md5s, F.col("doc_id").eqNullSafe(F.col("md5_doc_id")))
         .select("doc_id", "n_tokens", "mean_bits", "content_md5")
     )
 

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from duckdb_nats_jetstream_spark.errors import require
 from duckdb_nats_jetstream_spark.functions.json_extract import json_extract
-from duckdb_nats_jetstream_spark.tables import table_path
+from duckdb_nats_jetstream_spark.tables import read_parquet, table_path
 
 #: DuckDB-oracle equivalent of the events→message-log mapping. Kept here as
 #: the single source of truth; every oracle SQL that scans the stream embeds
@@ -196,8 +196,7 @@ def message_scan(
     # binary search). Filtering on derived columns (seq = event_id+1, the
     # ns→µs timestamp conversion) would defeat pushdown, which at 100 TB is
     # the difference between scanning one row group and scanning the table.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(table_path(sf_dir, "events"))
+    ev = read_parquet(spark, table_path(sf_dir, "events"))
     ts_type = ev.schema["ts"].dataType
     ts_raw_ns = isinstance(ts_type, T.LongType)
     ts_ntz = isinstance(ts_type, T.TimestampNTZType)
@@ -234,7 +233,7 @@ def message_scan(
             # it). One extra tiny aggregate over the pushed-down ts filter,
             # broadcast as a 1-row bound — the distributed stand-in for the
             # reference's driver-side resolution.
-            raw = spark.read.parquet(table_path(sf_dir, "events"))
+            raw = read_parquet(spark, table_path(sf_dir, "events"))
             at_or_after = (
                 F.col("ts") >= F.lit(_micros(t1) * 1000)
                 if ts_raw_ns

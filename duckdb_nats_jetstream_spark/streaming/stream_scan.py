@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from duckdb_nats_jetstream_spark.functions.json_extract import json_extract
 from duckdb_nats_jetstream_spark.session import scoped_conf
+from duckdb_nats_jetstream_spark.sinks import _prunable_timestamps
 
 def _events_raw_ts_type(log_dir: str) -> T.DataType:
     """Inspect one parquet file to learn the stored ts flavor — streaming
@@ -160,12 +161,16 @@ def run_to_completion(stream_df: DataFrame, checkpoint_dir: str, mode: str = "ap
         .trigger(availableNow=True)
         .start()
     )
+    _await_drain(q, "run_to_completion")
+    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
+
+
+def _await_drain(q, caller: str) -> None:
+    """Wait at most ``RUN_TIMEOUT_S`` for ``q`` to finish; past it, stop the
+    query and raise ``TimeoutError``."""
     if not q.awaitTermination(RUN_TIMEOUT_S):
         q.stop()
-        raise TimeoutError(
-            f"run_to_completion: query {name} still running after {RUN_TIMEOUT_S}s"
-        )
-    return stream_df.sparkSession.sql(f"SELECT * FROM {name}")
+        raise TimeoutError(f"{caller}: query {q.name or q.id} still running after {RUN_TIMEOUT_S}s")
 
 
 def continuous_rollup_sink(
@@ -188,7 +193,8 @@ def continuous_rollup_sink(
     update mode only re-emits changed keys, and overwriting a whole window
     partition would silently drop that window's unchanged keys. At scale
     this is one small file per touched group per batch, never a table
-    rewrite.
+    rewrite. Timestamps are written as INT64 ``TIMESTAMP_MICROS`` (see
+    ``sinks``).
 
     One invocation runs one micro-batch per batch of new files, and each
     batch's plan runs once: the query starts with
@@ -217,13 +223,14 @@ def continuous_rollup_sink(
         )
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__p", F.col(partition_col).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__p", *key_cols)
-            .parquet(out_dir)
-        )
+        with _prunable_timestamps(batch_df.sparkSession):
+            (
+                batch_df.withColumn("__p", F.col(partition_col).cast("long"))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("__p", *key_cols)
+                .parquet(out_dir)
+            )
 
     writer = (
         windowed_df.writeStream.foreachBatch(_write)
@@ -250,11 +257,22 @@ def read_rollup(spark, out_dir: str) -> DataFrame:
 
 def parquet_sink(stream_df: DataFrame, out_dir: str, checkpoint_dir: str):
     """Continuous parquet export — the streaming analogue of the reference's
-    COPY TO parquet (ref:docs/EXAMPLES.md:225-233)."""
-    return (
+    COPY TO parquet (ref:docs/EXAMPLES.md:225-233). Drains the input
+    available now and returns the finished query; like
+    :func:`run_to_completion`, it stops the query and raises
+    ``TimeoutError`` after ``RUN_TIMEOUT_S``.
+
+    Timestamps are written as INT64 ``TIMESTAMP_MICROS`` (see ``sinks``).
+    Spark's file sink reads the encoding from the session it was started
+    from, when each batch writes — not from the stream's cloned session —
+    so the conf stays pinned until the drain ends."""
+    writer = (
         stream_df.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        .start()
     )
+    with _prunable_timestamps(stream_df.sparkSession):
+        q = writer.start()
+        _await_drain(q, "parquet_sink")
+    return q

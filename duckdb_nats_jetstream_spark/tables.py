@@ -74,18 +74,81 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _ns_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark can't read those
-    natively (PARQUET_TYPE_ILLEGAL); we read them as long and convert."""
-    import pyarrow.parquet as pq
+def _footer_schema(spark: SparkSession, path: str):
+    """``(schema, ns_cols)`` from one parquet file's footer: the schema
+    ``spark.read.parquet`` infers, and the columns stored as
+    TIMESTAMP(NANOS), which Spark reads only as long, under ``nanosAsLong``.
+    ``schema`` is None when the footer holds a type the mapping leaves to
+    Spark's inference: INT96, one :func:`_left_to_inference` names, or one
+    without an Arrow→Spark conversion (unsigned ints, ...)."""
+    import json
 
-    schema = pq.read_schema(path)
-    out = []
-    for field in schema:
-        t = field.type
-        if str(t).startswith("timestamp[ns"):
-            out.append(field.name)
-    return out
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    with pq.ParquetFile(path) as pf:
+        arrow = pf.schema_arrow
+        cols = {c.path: c for c in map(pf.schema.column, range(len(pf.schema)))}
+    # top-level INT64 timestamps: {name: {"timeUnit", "isAdjustedToUTC"}}
+    ts = {
+        f.name: json.loads(cols[f.name].logical_type.to_json())
+        for f in arrow
+        if pat.is_timestamp(f.type) and cols[f.name].physical_type == "INT64"
+    }
+    ns_cols = [c for c, t in ts.items() if t["timeUnit"] == "nanoseconds"]
+    if any(f.name not in ts and _left_to_inference(f.type) for f in arrow):
+        return None, ns_cols
+    # Spark's rule for a MILLIS/MICROS column not adjusted to UTC
+    infer_ntz = any(not t["isAdjustedToUTC"] for t in ts.values()) and spark.conf.get(
+        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
+    ) == "true"
+
+    def spark_type(f):
+        t = ts.get(f.name)
+        if t is None:
+            return from_arrow_type(f.type)
+        if t["timeUnit"] == "nanoseconds":
+            return T.LongType()
+        if infer_ntz and not t["isAdjustedToUTC"]:
+            return T.TimestampNTZType()
+        return T.TimestampType()
+
+    try:
+        return T.StructType([T.StructField(f.name, spark_type(f)) for f in arrow]), ns_cols
+    except TypeError:  # no Arrow→Spark conversion
+        return None, ns_cols
+
+
+def _left_to_inference(t) -> bool:
+    """Spark reads ``t`` other than its Arrow conversion says — a timestamp
+    (unit and UTC flag decide; mapped above only at top level), a duration
+    (read as long), a time — or ``t`` nests such a type."""
+    import pyarrow.types as pat
+
+    return (
+        pat.is_timestamp(t) or pat.is_duration(t) or pat.is_time(t)
+        or any(_left_to_inference(t.field(i).type) for i in range(t.num_fields))
+    )
+
+
+def _read_parquet(spark: SparkSession, path: str):
+    schema, ns_cols = _footer_schema(spark, path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path), ns_cols
+
+
+def read_parquet(spark: SparkSession, path: str):
+    """``spark.read.parquet(path)`` of one parquet file, with the schema
+    declared from the file's footer instead of inferred: inference runs a
+    one-task Spark job per read, the declared schema none. The schema is
+    the one Spark infers (TIMESTAMP(NANOS) columns as long, with
+    ``nanosAsLong`` set on the session as :func:`read_table` explains);
+    a footer type the mapping does not cover falls back to inference."""
+    return _read_parquet(spark, path)[0]
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str):
@@ -112,11 +175,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
     """
     from pyspark.sql import functions as F, types as T
 
-    path = table_path(sf_dir, name)
-    ns_cols = _ns_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df, ns_cols = _read_parquet(spark, table_path(sf_dir, name))
     for c in ns_cols:
         # integer div — float division would lose precision above 2^53 ns
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

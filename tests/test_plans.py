@@ -531,18 +531,30 @@ def test_unigram_bits_scalar_total_is_broadcast(spark, sf_dir):
     """The corpus-total scalar must join by broadcast (1 row), the
     vocabulary join must be a hash join on the token key — never
     cartesian — and the r13 token-keyed window (a stopword-skew hazard;
-    reverted r14) must stay gone. The query is now eager († lifecycle),
-    so assert on the captured pre-checkpoint build plan."""
-    from duckdb_nats_jetstream_spark.plans.audit import capture_checkpoint_plans
+    reverted r14) must stay gone. The query is one lazy plan."""
     from duckdb_nats_jetstream_spark.queries.pipeline5 import text_unigram_bits
 
-    with capture_checkpoint_plans() as plans:
-        text_unigram_bits(spark, sf_dir)
-    assert plans, "expected the † lifecycle to checkpoint a build plan"
-    plan = "\n".join(plans)
+    plan = physical_plan(text_unigram_bits(spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
     assert "Window" not in plan, "token-keyed window shuffle is back"
+
+
+@pytest.mark.parametrize("query", ["text_unigram_bits", "docs_curation_v3"])
+def test_unigram_scores_reuse_doc_token_exchange(spark, sf_dir, registry, query):
+    """``_unigram_bit_scores`` is lazy: no cache outlives the build, and
+    the (doc_id, token) aggregate that feeds both the scoring join and the
+    vocabulary is shuffled once — the second consumer reads it through a
+    ``ReusedExchange`` in the executed (final adaptive) plan."""
+    df = registry[query][0](spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    df.collect()
+    plan = physical_plan(df)
+    assert re.search(
+        r"ReusedExchange \[doc_id#\d+L?, token#\d+, count#\d+L?\], "
+        r"Exchange hashpartitioning\(doc_id#\d+L?, token#\d+",
+        plan,
+    ), plan
 
 
 def test_runtime_bloom_filter_prunes_fact_side(spark, sf_dir):

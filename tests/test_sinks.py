@@ -242,3 +242,57 @@ def test_scoped_conf_threads_and_conflict(spark):
                 pass
         assert spark.conf.get(key, None) == "on"
     assert spark.conf.get(key, None) is None
+
+
+def _timestamp_encodings(out_dir) -> dict[str, set[tuple[str, str]]]:
+    """``column -> {(physical type, time unit)}`` over every written parquet
+    file's timestamp columns."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    got: dict[str, set[tuple[str, str]]] = {}
+    for root, _, leaves in os.walk(out_dir):
+        for leaf in leaves:
+            if not leaf.endswith(".parquet"):
+                continue
+            schema = pq.ParquetFile(os.path.join(root, leaf)).schema
+            for i in range(len(schema)):
+                col = schema.column(i)
+                lt = json.loads(col.logical_type.to_json())
+                if col.physical_type == "INT96" or lt.get("Type") == "Timestamp":
+                    got.setdefault(col.name, set()).add(
+                        (col.physical_type, lt.get("timeUnit", ""))
+                    )
+    return got
+
+
+@pytest.mark.parametrize("sink", ["continuous_rollup_sink", "parquet_sink"])
+def test_streaming_sinks_write_micros_timestamps(spark, tmp_path, sink):
+    """The two streaming file sinks pin INT64 ``TIMESTAMP(MICROS)`` like
+    every batch writer — the rollup inside its foreachBatch write, the file
+    sink for its whole drain, because Spark's file sink reads the encoding
+    from the starting session as each batch writes — and leave the
+    caller's conf as it was."""
+    import shutil
+
+    from duckdb_nats_jetstream_spark.streaming import stream_scan as S
+
+    conf_key = "spark.sql.parquet.outputTimestampType"
+    prev = spark.conf.get(conf_key)
+    log = tmp_path / "log"
+    log.mkdir()
+    shutil.copy(os.path.join(SF_DIR, "events.parquet"), log / "a.parquet")
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    stream = S.message_stream(spark, str(log))
+    if sink == "continuous_rollup_sink":
+        q = S.continuous_rollup_sink(S.windowed_message_counts(stream), out, ckpt)
+        want = {"window_start", "window_end"}
+    else:
+        q = S.parquet_sink(stream, out, ckpt)
+        want = {"ts_nats"}
+    q.awaitTermination()
+    got = _timestamp_encodings(out)
+    assert set(got) == want, got
+    assert all(enc == {("INT64", "microseconds")} for enc in got.values()), got
+    assert spark.conf.get(conf_key) == prev
