@@ -34,7 +34,7 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from duckdb_nats_jetstream_spark.queries import full_registry
 
-    return {name: fn for name, (fn, _sql) in full_registry().items()}
+    return {name: entry[0] for name, entry in full_registry().items()}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -145,8 +145,9 @@ def main() -> None:
     sf = float(m.group(1)) if m else None
 
     # the IVF oracle embeds a codebook trained from SPARK_GRAFT_ORACLE_SF_DIR
-    # at registry-import time; point it at THIS bench's sf_dir (unless the
-    # caller pinned it) so the timed mirror actually mirrors the data
+    # when its entry's oracle is first read (the DuckDB mirror below); point
+    # it at THIS bench's sf_dir (unless the caller pinned it) so the timed
+    # mirror actually mirrors the data
     os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
 
     from duckdb_nats_jetstream_spark.queries import full_registry
@@ -190,7 +191,7 @@ def main() -> None:
     attempts_map: dict[str, list[float]] = {}
     errors: dict[str, str] = {}
     for name in sorted(registry):
-        fn, _sql = registry[name]
+        fn = registry[name][0]
         attempts: list[float] = []
         last_err: str | None = None
         for _ in range(3):
@@ -246,7 +247,7 @@ def main() -> None:
         # incremental: time ONLY mirrors with no carried-forward number
         # (new queries since the last full sweep) so driver runs stay fast
         missing = [
-            n for n in sorted(timings) if registry[n][1] and n not in duckdb_s
+            n for n in sorted(timings) if n not in duckdb_s and registry[n][1]
         ]
         if missing:
             con = _duckdb_con(sf_dir)

@@ -232,10 +232,10 @@ def build_audit(sf_dir: str = "/root/testdata/sf0.001") -> list[tuple[str, dict]
 
     spark = get_spark("plan-audit")
     rows = []
-    for name, (fn, _sql) in full_registry().items():
+    for name, entry in full_registry().items():
         try:
             with capture_checkpoint_plans() as builds:
-                row = audit_row(physical_plan(fn(spark, sf_dir)))
+                row = audit_row(physical_plan(entry[0](spark, sf_dir)))
             if builds:
                 # fold every pre-checkpoint build plan into the row: the
                 # returned DF of an eager query is a bare ExistingRDD scan,

@@ -8,21 +8,21 @@ are checked rows-only).
 
 from __future__ import annotations
 
+import importlib
 import os
 import warnings
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 #: Oracle slot: a literal SQL string, None (rows-only), or a ZERO-ARG
 #: CALLABLE returning either — used by oracles that are expensive to build
-#: (DuckDB k-means codebook training) so module import stays side-effect
-#: free; ``full_registry`` resolves callables lazily, keyed on the oracle
-#: SF dir so a late ``SPARK_GRAFT_ORACLE_SF_DIR`` change can't serve a
-#: stale codebook.
+#: (DuckDB k-means codebook training) so neither module import nor
+#: ``full_registry`` runs them: the callable runs when the entry's oracle is
+#: first read, cached per oracle SF dir so a late
+#: ``SPARK_GRAFT_ORACLE_SF_DIR`` change can't serve a stale codebook.
 OracleSql = str | None | Callable[[], str | None]
-Registry = dict[str, tuple[QueryFn, str | None]]
 
 _ORACLE_CACHE: dict[tuple[Callable[[], str | None], str], str | None] = {}
 
@@ -44,40 +44,60 @@ def _resolve_oracle(sql: OracleSql) -> str | None:
     return _ORACLE_CACHE[key]
 
 
+class Entry:
+    """One registry entry, read as the pair ``(spark_fn, oracle_sql)``.
+
+    ``entry[0]`` is the query builder and reads nothing else. ``entry[1]``
+    (and unpacking ``fn, sql = entry``) resolves the oracle slot at that
+    moment, through :func:`_resolve_oracle`; readers that only build
+    queries index ``[0]`` so they never run a DuckDB oracle."""
+
+    __slots__ = ("fn", "_sql")
+
+    def __init__(self, fn: QueryFn, sql: OracleSql) -> None:
+        self.fn = fn
+        self._sql = sql
+
+    def __getitem__(self, i: int) -> QueryFn | str | None:
+        if i == 0:
+            return self.fn
+        if i == 1:
+            return _resolve_oracle(self._sql)
+        raise IndexError("registry entry index out of range")
+
+    def __iter__(self) -> Iterator[QueryFn | str | None]:
+        yield self.fn
+        yield _resolve_oracle(self._sql)
+
+
+Registry = dict[str, Entry]
+
+#: the modules whose ``QUERIES`` make up the registry, in registry order
+_MODULES: tuple[str, ...] = (
+    "pipeline",
+    "pipeline2",
+    "pipeline3",
+    "pipeline4",
+    "pipeline5",
+    "pipeline6",
+    "pipeline7",
+    "relational2",
+    "stream",
+    "relational",
+)
+
 #: rows-only queries (no oracle) sit at the end of the registry.
 _ROWS_ONLY_LAST: list[str] = ["multimodal_phash", "multimodal_resize"]
 
 
 def full_registry() -> Registry:
-    from duckdb_nats_jetstream_spark.queries import (
-        pipeline,
-        pipeline2,
-        pipeline3,
-        pipeline4,
-        pipeline5,
-        pipeline6,
-        pipeline7,
-        relational,
-        relational2,
-        stream,
-    )
-
+    """Every registered query. Building it imports the query modules and
+    runs no oracle builder: each entry resolves its oracle when read."""
     merged: Registry = {}
-    for mod in (
-        pipeline,
-        pipeline2,
-        pipeline3,
-        pipeline4,
-        pipeline5,
-        pipeline6,
-        pipeline7,
-        relational2,
-        stream,
-        relational,
-    ):
-        for name, (fn, sql) in mod.QUERIES.items():
+    for mod in _MODULES:
+        for name, (fn, sql) in importlib.import_module(f"{__name__}.{mod}").QUERIES.items():
             assert name not in merged, f"duplicate query name {name}"
-            merged[name] = (fn, _resolve_oracle(sql))
+            merged[name] = Entry(fn, sql)
 
     out = {n: e for n, e in merged.items() if n not in _ROWS_ONLY_LAST}
     for name in _ROWS_ONLY_LAST:

@@ -766,11 +766,12 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ivf_sql() -> str | None:
     """Generate the embedded-codebook oracle for the scale factor the
     oracle will RUN against (``SPARK_GRAFT_ORACLE_SF_DIR``; bench.py points
-    it at its own sf_dir before importing the registry, so the mirror's
+    it at its own sf_dir before reading any oracle, so the mirror's
     codebook always matches the data it queries). Registered as a LAZY
-    callable — ``queries._resolve_oracle`` runs it at registry-build time
-    (not import), caches per SF dir, and degrades this entry alone to
-    rows-only with a logged warning if the parquet is unreadable."""
+    callable — ``queries._resolve_oracle`` runs it when the entry's oracle
+    is first read (not at import or registry build), caches per SF dir,
+    and degrades this entry alone to rows-only with a logged warning if
+    the parquet is unreadable."""
     import os
 
     return S.sql_ivf_topk(

@@ -200,7 +200,8 @@ def sim_hybrid_rrf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hybrid_rrf_ann_sql() -> str:
     """Lazy oracle (the ``_ivf_sql`` pattern): the IVF leg's embedded
     codebook must be trained on the SF the oracle runs against, so this
-    builds at registry-resolve time against ``SPARK_GRAFT_ORACLE_SF_DIR``.
+    builds when the entry's oracle is first read, against
+    ``SPARK_GRAFT_ORACLE_SF_DIR``.
     Fusion term order matches ``rrf_fuse_many``'s left-to-right sum
     (lex, then ann) so every IEEE rounding step agrees."""
     import os

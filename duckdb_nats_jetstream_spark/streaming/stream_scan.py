@@ -31,8 +31,12 @@ def _events_raw_ts_type(log_dir: str) -> T.DataType:
     LongType on an empty live-tail dir made the first real micro-batch
     fail with a parquet conversion error once timestamp-flavored files
     appeared; pass ``ts_type`` to :func:`message_stream` to start a
-    stream ahead of its first file)."""
+    stream ahead of its first file). The flavor is the column's parquet
+    physical and logical type, as in ``tables._footer_schema``: pyarrow
+    reports an INT96 column as ``timestamp[ns]``, but Spark reads INT96 as
+    TIMESTAMP, not long."""
     import glob
+    import json
     import os
 
     import pyarrow.parquet as pq
@@ -45,11 +49,14 @@ def _events_raw_ts_type(log_dir: str) -> T.DataType:
             "ns-as-long logs, TimestampNTZType/TimestampType for "
             "timestamp-encoded logs) to tail a not-yet-written directory"
         )
-    t = pq.read_schema(candidates[0]).field("ts").type
-    s = str(t)
-    if s.startswith("timestamp[ns") or not s.startswith("timestamp"):
+    with pq.ParquetFile(candidates[0]) as pf:
+        ts = {c.path: c for c in map(pf.schema.column, range(len(pf.schema)))}["ts"]
+    if ts.physical_type == "INT96":
+        return T.TimestampType()
+    logical = json.loads(ts.logical_type.to_json())
+    if logical["Type"] != "Timestamp" or logical["timeUnit"] == "nanoseconds":
         return T.LongType()  # ns-as-long
-    if getattr(t, "tz", None) is None:
+    if not logical["isAdjustedToUTC"]:
         return T.TimestampNTZType()
     return T.TimestampType()
 

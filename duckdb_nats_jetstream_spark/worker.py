@@ -15,6 +15,12 @@ otherwise hand the importer the directory already in
 re-read, so imports see what they saw before. The package installs it on
 import inside a PySpark worker (:func:`applies`); the first task of a
 worker runs before the package is imported and pays the re-read once.
+
+So the fix reaches only workers that import the package. A worker whose
+tasks only run functions that never import it (a user UDF defined outside
+the package and pickled by value) keeps the stock re-read before every
+task; once any task of a reused worker imports the package, the fix holds
+for that worker's later tasks, whatever function they run.
 """
 
 from __future__ import annotations

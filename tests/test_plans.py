@@ -77,8 +77,8 @@ def test_registry_wide_no_cartesian_sweep(spark, sf_dir):
     offenders = []
     leakers = []
     cache_mgr = spark._jsparkSession.sharedState().cacheManager()
-    for name, (fn, _sql) in full_registry().items():
-        plan = physical_plan(fn(spark, sf_dir))
+    for name, entry in full_registry().items():
+        plan = physical_plan(entry[0](spark, sf_dir))
         if "CartesianProduct" in plan:
             offenders.append(name)
         # operators that persist() intermediates must unpersist the SAME

@@ -46,6 +46,34 @@ def test_stream_matches_batch(spark, sf_dir, log_dir, tmp_path):
     assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
 
 
+def test_int96_log_stream_matches_batch(spark, tmp_path):
+    """An INT96 ``ts`` (pyarrow reports it as ``timestamp[ns]``) is read by
+    Spark as TIMESTAMP, not as ns-as-long: the stream must declare it so,
+    or its first micro-batch fails with a parquet type mismatch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    log = tmp_path / "int96_log"
+    log.mkdir()
+    n = 3
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array(range(n), pa.int64()),
+            "ts": pa.array([1_704_067_200_000_000 + 7 * i for i in range(n)], pa.timestamp("us")),
+            "user_id": pa.array([10, 11, 12], pa.int64()),
+            "event_type": pa.array(["view", "click", "view"]),
+            "value": pa.array([1.5, 2.0, None]),
+            "props": pa.array(['{"k": 1}', "{}", None]),
+        }),
+        log / "events.parquet",
+        use_deprecated_int96_timestamps=True,
+    )
+    got = run_to_completion(message_stream(spark, str(log)), str(tmp_path / "ckpt")).collect()
+    want = message_scan(spark, str(log), payload_binary=False).collect()
+    assert len(want) == n
+    assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
+
+
 def test_windowed_counts_with_watermark(spark, sf_dir, log_dir, tmp_path):
     stream = message_stream(spark, log_dir)
     agg = windowed_message_counts(stream, window="6 hours", watermark="1 hour")

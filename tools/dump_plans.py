@@ -27,7 +27,6 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
 
     from duckdb_nats_jetstream_spark.plans import audit as A
     from duckdb_nats_jetstream_spark.plans import explain as E
@@ -46,7 +45,7 @@ def main() -> None:
     orig = A.__dict__["capture_checkpoint_plans"]
 
     for name in names:
-        fn, _sql = registry[name]
+        fn = registry[name][0]
         import duckdb_nats_jetstream_spark.plans.explain as ex
 
         saved = ex.physical_plan

@@ -147,7 +147,6 @@ def group_records(log_dir: str) -> dict[str, dict]:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.environ.setdefault("SPARK_GRAFT_ORACLE_SF_DIR", sf_dir)
     log_dir = enable_event_log()
 
     import bench
@@ -164,7 +163,7 @@ def main() -> None:
 
     walls: dict[str, dict] = {}
     for name in names:
-        fn, _sql = registry[name]
+        fn = registry[name][0]
         df, build = measure(spark, f"{name}:build", lambda: fn(spark, sf_dir))
         exe = {"wall_s": 0.0, "err": "build failed"}
         if build["err"] is None:

@@ -132,7 +132,7 @@ def main() -> None:
     from duckdb_nats_jetstream_spark.session import get_spark
     from duckdb_nats_jetstream_spark.tables import read_table
 
-    fns = {name: fn for name, (fn, _sql) in full_registry().items()}
+    fns = {name: entry[0] for name, entry in full_registry().items()}
     names = [n for n in args.only.split(",") if n] or list(fns)
 
     spark = get_spark("stress-fullsweep")

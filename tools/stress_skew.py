@@ -120,7 +120,7 @@ def _build_events(out_dir: str, skewed: bool) -> None:
 def run_one(spark, name: str, sf_dir: str) -> dict:
     from duckdb_nats_jetstream_spark.queries import full_registry
 
-    fn, _sql = full_registry()[name]
+    fn = full_registry()[name][0]
     return _measure(
         spark,
         lambda: fn(spark, sf_dir),
