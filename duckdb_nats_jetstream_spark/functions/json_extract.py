@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from duckdb_nats_jetstream_spark.errors import require
+from duckdb_nats_jetstream_spark.errors import require, require_new_columns
 
 
 def json_path_col(payload: Column | str, path: str) -> Column:
@@ -48,7 +48,10 @@ def extracted_name(path: str) -> str:
 
 
 def json_extract(df: DataFrame, fields: list[str], payload_col: str = "payload") -> DataFrame:
-    """Append one string column per requested field."""
+    """Append one string column per requested field. Bind-time checked:
+    the output names are distinct and shadow no column of ``df``."""
     require(bool(fields), "json_extract requires at least one field")
-    cols = [json_path_col(payload_col, f).alias(extracted_name(f)) for f in fields]
+    names = [extracted_name(f) for f in fields]
+    require_new_columns(df.columns, names, "json_extract")
+    cols = [json_path_col(payload_col, f).alias(n) for f, n in zip(fields, names)]
     return df.select("*", *cols)

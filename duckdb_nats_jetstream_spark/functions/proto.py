@@ -33,7 +33,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, types as T
 
-from duckdb_nats_jetstream_spark.errors import BindError
+from duckdb_nats_jetstream_spark.errors import BindError, require_new_columns
 from duckdb_nats_jetstream_spark.schema import PROTO_TO_SPARK
 
 SCALARS = set(PROTO_TO_SPARK) - {"enum"}
@@ -477,9 +477,10 @@ def validate_proto_path(
 
 def path_extractor(proto_text: str, message_name: str, paths: list[str]):
     """Bind-time-validated typed path extraction kernel, shared by the
-    DataFrame operator (:func:`proto_extract`) and the ``nats_jetstream``
-    DataSource's proto options. Returns ``(out_names, spark_types,
-    extract)`` where ``extract(payload: bytes | None) -> list`` yields one
+    DataFrame operator (:func:`proto_extract`, which ``nats_scan``'s proto
+    parameters also go through) and the codec round-trip queries in
+    ``queries/stream.py``. Returns ``(out_names, spark_types, extract)``
+    where ``extract(payload: bytes | None) -> list`` yields one
     value per path with the reference's reflection semantics
     (ref:src/nats_scan.cpp:456-544): an absent *scalar* reads as its proto3
     default; NULL only when an ancestor nested message is unset (ref:
@@ -560,12 +561,7 @@ def proto_extract(
     decoded from a protobuf payload column. Bind-time schema: validated
     against the .proto before any job is submitted."""
     out_names, types, extract = path_extractor(proto_text, message_name, paths)
-    clash = set(out_names) & set(df.columns)
-    if clash:
-        raise BindError(
-            f"proto_extract output column(s) {sorted(clash)} collide with "
-            f"existing columns; rename or drop them before extraction"
-        )
+    require_new_columns(df.columns, out_names, "proto_extract")
 
     in_fields = df.schema.fields
     out_schema = T.StructType(

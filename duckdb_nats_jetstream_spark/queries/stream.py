@@ -203,18 +203,16 @@ def scan_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def nats_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The nats_jetstream Python DataSource (replay transport) — proves the
     connector path yields exactly what the oracle mapping defines."""
-    from duckdb_nats_jetstream_spark.sources.nats_source import register
+    from duckdb_nats_jetstream_spark.sources.nats_source import nats_scan, register
 
     register(spark)
-    return (
-        spark.read.format("nats_jetstream")
-        .option("stream", "events")
-        .option("replay_path", f"{sf_dir}/events.parquet")
-        .option("json_extract", "k")
-        .option("partitions", "8")
-        .load()
-        .select("seq", "subject", "ts_nats", "k")
-    )
+    return nats_scan(
+        spark.read,
+        "events",
+        replay_path=f"{sf_dir}/events.parquet",
+        partitions=8,
+        json_extract=["k"],
+    ).select("seq", "subject", "ts_nats", "k")
 
 
 def scan_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,10 +1,10 @@
 """Schemas and type maps.
 
 Base message schema (ref:src/nats_scan.cpp:365-385; docs/GUIDE.md:112):
-``stream, subject, seq, ts_nats, payload`` — computed at *bind* time from the
-query parameters, never inferred from data. Payload is string when JSON
-extraction is requested, binary otherwise (the v0.1.1 semantics,
-ref:CHANGELOG.md:9-10, src/nats_scan.cpp:379-385).
+``stream, subject, seq, ts_nats, payload`` — fixed, never inferred from
+data. It is the ``nats_jetstream`` source's schema. Payload extraction
+composes above it (``nats_scan``, ``message_scan``), and turns payload to
+string in JSON mode (ref:src/nats_scan.cpp:379-385).
 
 Protobuf/typed-field → Spark type map (ref:src/nats_scan.cpp:130-166):
 Spark has no unsigned integers, so uint32→long (lossless) and uint64→long
@@ -20,21 +20,13 @@ BASE_FIELDS = [
     ("subject", T.StringType()),
     ("seq", T.LongType()),
     ("ts_nats", T.TimestampType()),
+    ("payload", T.BinaryType()),
 ]
 
 
-def message_schema(*, payload_binary: bool, extracted: list[tuple[str, T.DataType]] | None = None) -> T.StructType:
-    """Output schema for a message scan, computed at plan time.
-
-    ``payload_binary=False`` only in JSON-extraction mode
-    (ref:src/nats_scan.cpp:379-385).
-    """
-    fields = [T.StructField(n, t, True) for n, t in BASE_FIELDS]
-    payload_t: T.DataType = T.BinaryType() if payload_binary else T.StringType()
-    fields.append(T.StructField("payload", payload_t, True))
-    for name, dtype in extracted or []:
-        fields.append(T.StructField(name, dtype, True))
-    return T.StructType(fields)
+def message_schema() -> T.StructType:
+    """The five base message columns."""
+    return T.StructType([T.StructField(n, t, True) for n, t in BASE_FIELDS])
 
 
 # protobuf scalar type name → Spark type (ref:src/nats_scan.cpp:130-166)

@@ -2,9 +2,11 @@
 the semantics of the reference's ``nats_scan`` table function
 (ref:src/nats_scan.cpp:879-897), upgraded to Spark's execution model:
 
-- **Bind-time schema** from options, never inferred (ref:src/nats_scan.cpp:
-  365-409): 5 base columns; ``json_extract`` appends string columns and
-  flips payload to string (ref:src/nats_scan.cpp:379-391).
+- **Fixed schema**, never inferred: the 5 base columns
+  (ref:src/nats_scan.cpp:365-385). Payload extraction composes above the
+  source: :func:`nats_scan` applies the same ``json_extract``/
+  ``proto_extract`` transforms as ``message_scan``, so both scans give the
+  same values for the same log.
 - **Partitioned parallel scan** — the reference is hard single-threaded
   (``MaxThreads()==1``, ref:src/nats_scan.cpp:197-199) and lists parallel
   scanning as roadmap (ref:docs/GUIDE.md:484-488). Here ``partitions()``
@@ -34,7 +36,6 @@ from __future__ import annotations
 
 import datetime as _dt
 import functools
-import json
 import operator
 import re
 from collections.abc import Iterator
@@ -45,9 +46,15 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, functions as F
 
-from duckdb_nats_jetstream_spark.errors import BindError
+from duckdb_nats_jetstream_spark.errors import BindError, require
+from duckdb_nats_jetstream_spark.functions.json_extract import (
+    json_extract as _json_extract,
+)
+from duckdb_nats_jetstream_spark.functions.proto import (
+    proto_extract as _proto_extract,
+)
 from duckdb_nats_jetstream_spark.schema import message_schema
 
 _EPOCH = _dt.datetime(1970, 1, 1)
@@ -513,34 +520,6 @@ def _make_transport(options: dict):
     return NatsLiveTransport(options.get("url", "nats://localhost:4222"), stream)
 
 
-# --- extraction (reference §2.A5 semantics, python-side) ----------------------
-
-
-def _json_extract_value(payload: bytes, path: str):
-    """Reference JSON coercion rules (ref:src/nats_scan.cpp:777-830) with
-    real dot-paths: string as-is, bool → 'true'/'false', null/missing → None,
-    number → JSON literal text, object/array → compact JSON text,
-    unparseable → None."""
-    try:
-        doc = json.loads(payload.decode("utf-8"))
-    except (ValueError, UnicodeDecodeError):
-        return None
-    node = doc
-    for part in path.split("."):
-        if not isinstance(node, dict) or part not in node:
-            return None
-        node = node[part]
-    if node is None:
-        return None
-    if isinstance(node, bool):
-        return "true" if node else "false"
-    if isinstance(node, str):
-        return node
-    if isinstance(node, (int, float)):
-        return json.dumps(node)
-    return json.dumps(node, separators=(",", ":"))
-
-
 # --- the DataSource -----------------------------------------------------------
 
 
@@ -554,45 +533,13 @@ class SeqRangePartition(InputPartition):
 #: typo'd "strat_seq" can't silently widen a range scan into a full scan
 KNOWN_OPTIONS = {
     "stream", "url", "subject", "start_seq", "end_seq", "start_time",
-    "end_time", "json_extract", "partitions", "replay_path", "batch_size",
-    "proto_file", "proto_message", "proto_extract",
+    "end_time", "partitions", "replay_path",
     # spark adds its own bookkeeping options on load(); ignore lowercase path
     "path", "paths",
 }
 
 
-class ProtoConfig:
-    """Bind-time protobuf extraction config for the DataSource: the .proto
-    TEXT is read driver-side at bind and shipped with the reader (workers
-    never touch the filesystem path), mirroring the reference's bind-time
-    Importer parse (ref:src/nats_scan.cpp:287-328)."""
-
-    def __init__(self, proto_text: str, message_name: str, paths: list[str]):
-        from duckdb_nats_jetstream_spark.functions.proto import path_extractor
-
-        self.proto_text = proto_text
-        self.message_name = message_name
-        self.paths = paths
-        # validate at bind; rebuild the extractor lazily worker-side
-        self.out_names, self.spark_types, _ = path_extractor(
-            proto_text, message_name, paths
-        )
-        base = {"stream", "subject", "seq", "ts_nats", "payload"}
-        clash = base & set(self.out_names)
-        if clash:
-            raise BindError(
-                f"proto_extract output column(s) {sorted(clash)} collide "
-                f"with the base message columns; alias the proto field or "
-                f"extract a different path"
-            )
-
-    def extractor(self):
-        from duckdb_nats_jetstream_spark.functions.proto import path_extractor
-
-        return path_extractor(self.proto_text, self.message_name, self.paths)[2]
-
-
-def _parse_options(options: dict):
+def _parse_options(options: dict) -> str:
     unknown = {
         k for k in options
         if k.lower() not in KNOWN_OPTIONS and not k.lower().startswith("spark.")
@@ -600,52 +547,13 @@ def _parse_options(options: dict):
     if unknown:
         raise BindError(
             f"unknown nats_jetstream option(s) {sorted(unknown)}; "
-            f"valid options: {sorted(KNOWN_OPTIONS - {'path', 'paths'})}"
+            f"valid options: {sorted(KNOWN_OPTIONS - {'path', 'paths'})}; "
+            "payload extraction (json_extract, proto_file, proto_message, "
+            "proto_extract) composes above the source through nats_scan"
         )
     stream = options.get("stream")
     if not stream:
         raise BindError("nats_jetstream requires a 'stream' option")
-    json_fields = [
-        f.strip() for f in options.get("json_extract", "").split(",") if f.strip()
-    ]
-    if json_fields:
-        # bind-time collision checks, mirroring ProtoConfig's: a field
-        # whose output name (dots → underscores) shadows a base column
-        # would emit two same-named columns and fail far from here with
-        # an ambiguous-reference error
-        base = {"stream", "subject", "seq", "ts_nats", "payload"}
-        out_names = [f.replace(".", "_") for f in json_fields]
-        bad = [f for f, o in zip(json_fields, out_names) if o in base]
-        if bad:
-            raise BindError(
-                f"json_extract field(s) {bad} collide with the base "
-                "message columns"
-            )
-        if len(set(out_names)) != len(out_names):
-            dupes = sorted({o for o in out_names if out_names.count(o) > 1})
-            raise BindError(
-                f"json_extract fields produce duplicate column(s) {dupes} "
-                "(dots map to underscores)"
-            )
-    proto_fields = [
-        f.strip() for f in options.get("proto_extract", "").split(",") if f.strip()
-    ]
-    # reference bind matrix (ref:src/nats_scan.cpp:267-285)
-    if json_fields and proto_fields:
-        raise BindError("Cannot use both json_extract and proto_extract parameters")
-    proto_cfg = None
-    if proto_fields:
-        if not options.get("proto_file"):
-            raise BindError(
-                "proto_file parameter is required when using proto_extract"
-            )
-        if not options.get("proto_message"):
-            raise BindError(
-                "proto_message parameter is required when using proto_extract"
-            )
-        with open(options["proto_file"], encoding="utf-8") as fh:
-            proto_text = fh.read()
-        proto_cfg = ProtoConfig(proto_text, options["proto_message"], proto_fields)
     has_seq = "start_seq" in options or "end_seq" in options
     has_time = "start_time" in options or "end_time" in options
     if has_seq and has_time:
@@ -653,22 +561,13 @@ def _parse_options(options: dict):
             "Cannot specify both sequence range (start_seq/end_seq) and "
             "time range (start_time/end_time)"
         )
-    return stream, json_fields, proto_cfg
-
-
-def _pa_type(t):
-    """Spark type → the EXACT Arrow type Spark's JVM reader expects (child
-    field names and offset widths included) — delegated to PySpark's own
-    schema converter so the VectorLoader structure check can never drift."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    return to_arrow_schema(T.StructType([T.StructField("c", t, True)])).field(0).type
+    return stream
 
 
 class NatsScanBatchReader(DataSourceReader):
     def __init__(self, options: dict):
         self.options = dict(options)
-        self.stream, self.json_fields, self.proto_cfg = _parse_options(self.options)
+        self.stream = _parse_options(self.options)
         self.subject = self.options.get("subject")
         self.n_partitions = int(self.options.get("partitions", "8"))
 
@@ -708,7 +607,6 @@ class NatsScanBatchReader(DataSourceReader):
         transport = _make_transport(self.options)
         lo_us = _opt_ts_us(self.options.get("start_time"))
         hi_us = _opt_ts_us(self.options.get("end_time"))
-        json_mode = bool(self.json_fields)
 
         seqs: list[int] = []
         subjects: list[str] = []
@@ -741,41 +639,9 @@ class NatsScanBatchReader(DataSourceReader):
             pa.array(subjects, pa.string()),
             pa.array(seqs, pa.int64()),
             pa.array(ts_us_l, pa.timestamp("us")),
+            pa.array(payloads, pa.binary()),
         ]
-        names = ["stream", "subject", "seq", "ts_nats"]
-        if json_mode:
-            cols.append(
-                pa.array([p.decode("utf-8", "replace") for p in payloads], pa.string())
-            )
-            for f in self.json_fields:
-                cols.append(
-                    pa.array(
-                        [_json_extract_value(p, f) for p in payloads], pa.string()
-                    )
-                )
-                names.append(f.replace(".", "_"))
-            names.insert(4, "payload")
-        elif self.proto_cfg is not None:
-            # payload stays BLOB in proto mode (ref:src/nats_scan.cpp:379-385);
-            # one natively-typed column per validated dot path
-            cols.append(pa.array(payloads, pa.binary()))
-            names.append("payload")
-            extract = self.proto_cfg.extractor()
-            rows = [extract(p) for p in payloads]
-            for i, (n, t) in enumerate(
-                zip(self.proto_cfg.out_names, self.proto_cfg.spark_types)
-            ):
-                vals = [r[i] for r in rows]
-                if isinstance(t, T.MapType):
-                    vals = [
-                        sorted(v.items()) if isinstance(v, dict) else v for v in vals
-                    ]
-                cols.append(pa.array(vals, _pa_type(t)))
-                names.append(n)
-        else:
-            cols.append(pa.array(payloads, pa.binary()))
-            names.append("payload")
-        yield pa.RecordBatch.from_arrays(cols, names=names)
+        yield pa.RecordBatch.from_arrays(cols, names=message_schema().names)
 
 
 class NatsScanStreamReader(DataSourceStreamReader):
@@ -784,15 +650,8 @@ class NatsScanStreamReader(DataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.options = dict(options)
-        self.stream, self.json_fields, self.proto_cfg = _parse_options(self.options)
-        self.batch_size = int(self.options.get("batch_size", "2048"))
         self._transport = None
         self._initial: dict | None = None
-        # Build the batch reader ONCE, driver-side: it runs _parse_options,
-        # which reads options['proto_file'] from local disk. This object is
-        # pickled to executors with the .proto text already inlined in
-        # ProtoConfig — workers must never touch the driver-local path
-        # (r02 ADVICE: read() used to reconstruct it per partition).
         self._batch_reader = NatsScanBatchReader(self.options)
 
     def _t(self):
@@ -849,14 +708,8 @@ class NatsJetStreamDataSource(DataSource):
         return "nats_jetstream"
 
     def schema(self):
-        _stream, json_fields, proto_cfg = _parse_options(self.options)
-        if proto_cfg is not None:
-            extracted = list(zip(proto_cfg.out_names, proto_cfg.spark_types))
-            return message_schema(payload_binary=True, extracted=extracted)
-        extracted = [
-            (f.replace(".", "_"), T.StringType()) for f in json_fields
-        ]
-        return message_schema(payload_binary=not json_fields, extracted=extracted)
+        _parse_options(self.options)
+        return message_schema()
 
     def reader(self, schema):
         return NatsScanBatchReader(self.options)
@@ -867,3 +720,62 @@ class NatsJetStreamDataSource(DataSource):
 
 def register(spark) -> None:
     spark.dataSource.register(NatsJetStreamDataSource)
+
+
+def _names(v) -> list[str]:
+    """A list parameter; a bare string is one name."""
+    return [v] if isinstance(v, str) else list(v or [])
+
+
+def nats_scan(
+    reader,
+    stream: str,
+    *,
+    json_extract: list[str] | None = None,
+    proto_file: str | None = None,
+    proto_message: str | None = None,
+    proto_extract: list[str] | None = None,
+    **options,
+) -> DataFrame:
+    """The reference's ``nats_scan(stream, ...)`` table function
+    (ref:src/nats_scan.cpp:879-897) over the ``nats_jetstream`` source.
+
+    ``reader`` is ``spark.read`` (a bounded scan) or ``spark.readStream``
+    (a checkpointable tail); ``options`` are the source's own
+    (``replay_path``, ``start_seq``, ``subject``, ``partitions``, ...).
+    The source yields the 5 base columns; the reference's extraction
+    parameters compose above it through the same transforms
+    ``message_scan`` uses, so the JVM ``get_json_object`` is the one JSON
+    extractor. Call :func:`register` on the session first.
+
+    Bind rules (ref:src/nats_scan.cpp:267-285): JSON and proto together is
+    an error; ``proto_extract`` needs ``proto_file`` and ``proto_message``;
+    the ``.proto`` file is read here, driver-side, so workers never see
+    its path."""
+    json_fields = _names(json_extract)
+    proto_paths = _names(proto_extract)
+    require(
+        not (json_fields and proto_paths),
+        "Cannot use both json_extract and proto_extract parameters",
+    )
+    proto_text = None
+    if proto_paths:
+        require(
+            bool(proto_file),
+            "proto_file parameter is required when using proto_extract",
+        )
+        require(
+            bool(proto_message),
+            "proto_message parameter is required when using proto_extract",
+        )
+        with open(proto_file, encoding="utf-8") as fh:
+            proto_text = fh.read()
+    df = reader.format("nats_jetstream").options(stream=stream, **options).load()
+    if json_fields:
+        # payload is string in JSON mode (ref:src/nats_scan.cpp:379-391),
+        # and get_json_object takes no BINARY
+        df = df.withColumn("payload", F.col("payload").cast("string"))
+        return _json_extract(df, json_fields)
+    if proto_paths:
+        return _proto_extract(df, proto_text, proto_message, proto_paths)
+    return df

@@ -74,3 +74,10 @@ def test_cast_to_double(spark, payloads):
 def test_empty_fields_is_bind_error(spark, payloads):
     with pytest.raises(BindError):
         json_extract(payloads, [])
+
+
+def test_output_name_collision_and_duplicates_are_bind_errors(spark, payloads):
+    with pytest.raises(BindError, match="collide"):
+        json_extract(payloads, ["id"])
+    with pytest.raises(BindError, match="duplicate"):
+        json_extract(payloads, ["o.in", "o_in"])

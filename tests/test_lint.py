@@ -25,7 +25,10 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
   UI-port code;
 - a session conf is changed for a scope only through
   ``session.scoped_conf``: no other function puts back a value it saved
-  with ``.conf.get`` or calls ``.conf.unset``.
+  with ``.conf.get`` or calls ``.conf.unset``;
+- payload extraction stays in ``functions/``: no module under ``sources/``
+  imports ``json`` or ``path_extractor`` (a second extractor there gave
+  different values than ``get_json_object`` for the same log).
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -217,3 +220,22 @@ def test_conf_restore_only_in_scoped_conf():
                 ):
                     bad.add(f"{_rel(p)}:{n.lineno}")
     assert not bad, f"session conf restored outside scoped_conf: {sorted(bad)}"
+
+
+def test_extraction_stays_in_functions():
+    bad = []
+    for p in _py_files():
+        if not _rel(p).startswith("sources" + os.sep):
+            continue
+        with open(p, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Import):
+                names = [a.name for a in n.names]
+            elif isinstance(n, ast.ImportFrom):
+                names = [n.module or ""] + [a.name for a in n.names]
+            else:
+                continue
+            if any(m.split(".")[0] == "json" or m == "path_extractor" for m in names):
+                bad.append(f"{_rel(p)}:{n.lineno}")
+    assert not bad, f"payload extraction outside functions/: {bad}"

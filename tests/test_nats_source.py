@@ -1,6 +1,7 @@
 """The nats_jetstream Python DataSource: batch reads through format(), seq
-range splits, option-driven schema, streaming tail with checkpointed offsets
-— all against the parquet replay transport."""
+range splits, the fixed five-column schema, streaming tail with checkpointed
+offsets, and ``nats_scan``'s extraction composed above the source — all
+against the parquet replay transport."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ from duckdb_nats_jetstream_spark.errors import BindError
 from duckdb_nats_jetstream_spark.sources import message_scan
 from duckdb_nats_jetstream_spark.sources.nats_source import (
     NatsScanBatchReader,
+    nats_scan,
     register,
 )
 
@@ -39,24 +41,35 @@ def test_batch_read_matches_message_scan(spark, sf_dir):
 
 
 def test_schema_modes(spark, sf_dir):
+    """The source's schema is the five base columns whatever the options;
+    JSON mode (string payload plus one string column per field) is
+    ``nats_scan``'s, and the extraction options on the bare format name it."""
     plain = (
         spark.read.format("nats_jetstream")
         .option("stream", "events")
         .option("replay_path", _events(sf_dir))
+        .option("subject", "purchase")
         .load()
     )
+    assert [(f.name, f.dataType) for f in plain.schema] == [
+        (f.name, f.dataType) for f in message_scan(spark, sf_dir).schema
+    ]
     assert isinstance(plain.schema["payload"].dataType, T.BinaryType)
-    js = (
-        spark.read.format("nats_jetstream")
-        .option("stream", "events")
-        .option("replay_path", _events(sf_dir))
-        .option("json_extract", "k")
-        .load()
-    )
+    js = nats_scan(spark.read, "events", replay_path=_events(sf_dir), json_extract=["k"])
+    assert js.columns == ["stream", "subject", "seq", "ts_nats", "payload", "k"]
     assert isinstance(js.schema["payload"].dataType, T.StringType)
     assert isinstance(js.schema["k"].dataType, T.StringType)
     row = js.filter(F.col("seq") == 1).collect()[0]
     assert row.k is not None and row.k.isdigit()
+    for opt in ("json_extract", "proto_file", "proto_message", "proto_extract"):
+        with pytest.raises(Exception, match="nats_scan"):
+            (
+                spark.read.format("nats_jetstream")
+                .option("stream", "events")
+                .option("replay_path", _events(sf_dir))
+                .option(opt, "k")
+                .load()
+            )
 
 
 def test_seq_range_and_subject_options(spark, sf_dir):
@@ -156,8 +169,8 @@ def test_streaming_partitions_fan_out(spark, sf_dir):
 
 
 def test_proto_extract_options_end_to_end(spark, tmp_path):
-    """The reference's proto_file/proto_message/proto_extract option
-    surface on the connector: a binary-protobuf message log scans into
+    """The reference's proto_file/proto_message/proto_extract parameters
+    on ``nats_scan``: a binary-protobuf message log scans into
     natively-typed columns with payload staying BLOB."""
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -208,17 +221,14 @@ message Ev {
         log,
     )
 
-    df = (
-        spark.read.format("nats_jetstream")
-        .option("stream", "ev")
-        .option("replay_path", str(log))
-        .option("proto_file", str(proto_path))
-        .option("proto_message", "Ev")
-        .option("proto_extract", "eseq,name,value,vals,inner.k")
-        .load()
+    df = nats_scan(
+        spark.read,
+        "ev",
+        replay_path=str(log),
+        proto_file=str(proto_path),
+        proto_message="Ev",
+        proto_extract=["eseq", "name", "value", "vals", "inner.k"],
     )
-    from pyspark.sql import types as T
-
     sch = {f.name: f.dataType for f in df.schema.fields}
     assert isinstance(sch["payload"], T.BinaryType)  # BLOB in proto mode
     assert isinstance(sch["value"], T.DoubleType)
@@ -235,32 +245,27 @@ message Ev {
 
 
 def test_proto_options_bind_matrix(spark, sf_dir, tmp_path):
-    from duckdb_nats_jetstream_spark.sources.nats_source import _parse_options
-
     proto_path = tmp_path / "m.proto"
     proto_path.write_text('syntax = "proto3"; message M { int64 a = 1; }')
-    base = {"stream": "events", "replay_path": "x"}
+
+    def scan(**params):
+        return nats_scan(spark.read, "events", replay_path=_events(sf_dir), **params)
+
     with pytest.raises(BindError, match="proto_file parameter is required"):
-        _parse_options({**base, "proto_extract": "a"})
+        scan(proto_extract=["a"])
     with pytest.raises(BindError, match="proto_message parameter is required"):
-        _parse_options({**base, "proto_extract": "a", "proto_file": str(proto_path)})
+        scan(proto_extract=["a"], proto_file=str(proto_path))
     with pytest.raises(BindError, match="both json_extract and proto_extract"):
-        _parse_options(
-            {**base, "proto_extract": "a", "proto_file": str(proto_path),
-             "proto_message": "M", "json_extract": "k"}
-        )
+        scan(proto_extract=["a"], proto_file=str(proto_path),
+             proto_message="M", json_extract=["k"])
     with pytest.raises(BindError, match="not found"):
-        _parse_options(
-            {**base, "proto_extract": "a", "proto_file": str(proto_path),
-             "proto_message": "Nope"}
-        )
+        scan(proto_extract=["a"], proto_file=str(proto_path), proto_message="Nope")
     collide = tmp_path / "c.proto"
     collide.write_text('syntax = "proto3"; message M { int64 seq = 1; }')
-    with pytest.raises(BindError, match="collide with the base message columns"):
-        _parse_options(
-            {**base, "proto_extract": "seq", "proto_file": str(collide),
-             "proto_message": "M"}
-        )
+    with pytest.raises(BindError, match="collide with existing columns"):
+        scan(proto_extract=["seq"], proto_file=str(collide), proto_message="M")
+    with pytest.raises(BindError, match="duplicate"):
+        scan(proto_extract=["a", "a"], proto_file=str(proto_path), proto_message="M")
 
 
 # --- r10 sweep-5 regressions ---------------------------------------------------
@@ -362,15 +367,80 @@ def test_resolve_time_bounds_probe_count_is_logarithmic(sf_dir):
 
 
 def test_json_extract_base_column_collision_is_bind_error(spark, sf_dir):
-    with pytest.raises(Exception, match="collide|duplicate"):
-        (
-            spark.read.format("nats_jetstream")
-            .option("stream", "events")
-            .option("replay_path", _events(sf_dir))
-            .option("json_extract", "seq")
-            .load()
-            .collect()
+    with pytest.raises(BindError, match="collide"):
+        nats_scan(spark.read, "events", replay_path=_events(sf_dir), json_extract=["seq"])
+    with pytest.raises(BindError, match="duplicate"):
+        nats_scan(
+            spark.readStream, "events", replay_path=_events(sf_dir),
+            json_extract=["a.b", "a_b"],
         )
+
+
+#: payloads on which a Python ``json`` re-implementation and the JVM
+#: ``get_json_object`` disagree, next to plain ones
+_EDGE_PAYLOADS = [
+    '{"k": {"x": "é"}}',            # non-ASCII inside a nested object
+    '{"k": 1, "k": 2}',             # duplicate keys
+    '{"k": 1} trailing',            # trailing bytes
+    '{"k": NaN}',                   # NaN literal
+    '{"k": null, "a": {"b": 5}}',   # JSON null, nested path
+    '{"k": "s", "a": {"b": [1, {"c": true}]}}',
+    '{"a": 1}',                     # missing key, non-object parent
+    'not json',
+    '{"k": 42.5, "a": {"b": "ü"}}',
+]
+
+
+def _write_edge_log(path: str) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = len(_EDGE_PAYLOADS)
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array(range(n), pa.int64()),
+                "ts": pa.array(
+                    [1_704_067_200 * 10**9 + i for i in range(n)], pa.timestamp("ns")
+                ),
+                "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
+                "event_type": pa.array(["e"] * n),
+                "props": pa.array(_EDGE_PAYLOADS),
+            }
+        ),
+        path,
+    )
+
+
+def test_edge_payloads_extract_like_message_scan(spark, tmp_path):
+    """One JSON extractor: the source scan and ``message_scan`` give the
+    same values for the same log, row for row."""
+    _write_edge_log(str(tmp_path / "events.parquet"))
+    fields = ["k", "a.b"]
+    got = nats_scan(
+        spark.read, "events", replay_path=_events(tmp_path), json_extract=fields
+    ).collect()
+    want = message_scan(spark, str(tmp_path), json_fields=fields).collect()
+    assert len(got) == len(_EDGE_PAYLOADS)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_streaming_extraction_matches_batch(spark, tmp_path):
+    _write_edge_log(str(tmp_path / "events.parquet"))
+    scan = dict(replay_path=_events(tmp_path), json_extract=["k"])
+    q = (
+        nats_scan(spark.readStream, "events", **scan)
+        .writeStream.format("memory")
+        .queryName("nats_edge_tail")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    got = spark.table("nats_edge_tail").collect()
+    want = nats_scan(spark.read, "events", **scan).collect()
+    assert len(got) == len(_EDGE_PAYLOADS)
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
 
 def _write_shuffled_log(path: str, n: int = 400, rows_per_group: int = 50):

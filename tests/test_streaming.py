@@ -98,6 +98,18 @@ def test_streaming_json_extract_and_subject_filter(spark, log_dir, tmp_path):
     assert all(r.k is None or r.k.isdigit() for r in got)
 
 
+def test_json_field_shadowing_a_base_column_is_bind_error(spark, sf_dir, log_dir):
+    """Both scans reject, at build, a field whose output column already
+    exists, instead of emitting two ``seq`` columns that fail later with an
+    ambiguous reference."""
+    from duckdb_nats_jetstream_spark.errors import BindError
+
+    with pytest.raises(BindError, match="collide"):
+        message_scan(spark, sf_dir, json_fields=["seq"])
+    with pytest.raises(BindError, match="collide"):
+        message_stream(spark, log_dir, json_fields=["seq"])
+
+
 def test_streaming_typed_extract_matches_batch(spark, sf_dir, log_dir, tmp_path):
     """The JVM typed-extraction path composes unchanged on the stream:
     from_json struct + projection over readStream equals the batch plan."""
