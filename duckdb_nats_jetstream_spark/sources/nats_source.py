@@ -27,19 +27,25 @@ Transports:
   (ref:src/nats_scan.cpp:598-877) with timeouts applied to every
   round-trip, not just connect.
 
-Note on the fast path: this source crosses the Python boundary per row, so
-for bulk analytics over an *archived* log, prefer ``message_scan`` (pure JVM
-parquet scan). The DataSource is the *live/connector* path.
+Both transports hand the reader Arrow ``RecordBatch``es of at most
+``BATCH_ROWS`` messages — the reference's ``STANDARD_VECTOR_SIZE`` chunks —
+and ``read`` filters each batch with ``pyarrow.compute``, so this source
+crosses the Python boundary per batch, never per row. It still runs in a
+Python worker, so for bulk analytics over an *archived* log, prefer
+``message_scan`` (pure JVM parquet scan). The DataSource is the
+*live/connector* path.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
 import functools
-import operator
 import re
 from collections.abc import Iterator
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -56,21 +62,26 @@ from duckdb_nats_jetstream_spark.functions.proto import (
     proto_extract as _proto_extract,
 )
 from duckdb_nats_jetstream_spark.schema import message_schema
+from duckdb_nats_jetstream_spark.sources.message_scan import _as_timestamp, _micros
 
-_EPOCH = _dt.datetime(1970, 1, 1)
+#: rows per Arrow batch on both sides of ``fetch`` — the reference's
+#: ``STANDARD_VECTOR_SIZE`` chunk (PAPER.md)
+BATCH_ROWS = 2048
+
+#: the transports' batch contract: raw messages in, before any filter
+MESSAGE_BATCH_SCHEMA = pa.schema(
+    [
+        ("seq", pa.int64()),
+        ("subject", pa.string()),
+        ("ts_ns", pa.int64()),  # NULL: the message carries no timestamp
+        ("payload", pa.binary()),
+    ]
+)
 
 
 def _opt_ts_us(s: str | None) -> int | None:
-    """ISO timestamp option → epoch µs. 'Z'/offset-aware values normalize
-    to UTC (a naive value IS UTC by the engine's convention) — a bare
-    ``t - _EPOCH`` raises TypeError on aware datetimes, and 'Z' is the
-    natural format next to NATS' RFC3339 headers."""
-    if not s:
-        return None
-    t = _dt.datetime.fromisoformat(s)
-    if t.tzinfo is not None:
-        t = t.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-    return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+    """ISO timestamp option → epoch µs, UTC-normalised like ``message_scan``."""
+    return _micros(_as_timestamp(s)) if s else None
 
 
 def _resolve_time_bounds(
@@ -89,17 +100,19 @@ def _resolve_time_bounds(
     gap-skip forward in growing windows starting at width 1, so the live
     transport usually pays ONE round-trip per probe; messages without a
     timestamp are invisible to the search (read()'s exact filter excludes
-    them whenever a bound is set)."""
+    them whenever a bound is set). A probe takes the first timestamped
+    message in the order ``fetch`` yields them, which the live transport
+    yields in sequence order."""
 
     def first_ts_at_or_after(s: int):
         step = 1
         cur = s
         while cur <= end:
-            for seq, _subj, ts_ns, _p in transport.fetch(
-                cur, min(cur + step - 1, end)
-            ):
-                if ts_ns is not None:
-                    return seq, ts_ns // 1000
+            for batch in transport.fetch(cur, min(cur + step - 1, end)):
+                stamped = batch.filter(pc.is_valid(batch["ts_ns"])).slice(0, 1)
+                if stamped.num_rows:
+                    seq = int(stamped["seq"].to_numpy()[0])
+                    return seq, int(stamped["ts_ns"].to_numpy()[0]) // 1000
             cur += step
             step = min(step * 8, 1 << 16)
         return None
@@ -128,121 +141,111 @@ def _resolve_time_bounds(
 # --- transports ---------------------------------------------------------------
 
 
-#: per-worker decoded-slice cache, keyed by (path, stream, start, end) —
-#: Spark reuses Python workers across tasks, so a REPEATED slice decodes
-#: once per worker (distinct slices decode separately). BOUNDED: a
-#: streaming query produces a new (start, end) per micro-batch, and an
-#: unbounded dict would accumulate the whole decoded log over hours and
-#: OOM the worker — evict FIFO past the cap (dicts preserve insertion
-#: order; a batch touches each slice once, so FIFO ≈ LRU here).
-_REPLAY_CACHE: dict = {}
-_REPLAY_CACHE_CAP = 8
+def _footer_stats(md, column: str) -> list[tuple | None] | None:
+    """``(min, max)`` of the top-level ``column`` per row group, from the
+    parquet footer (None for a group written without statistics), or None
+    when the file has no such column. The column is located by
+    ``path_in_schema``, the physical leaf order, not by position: a ts-first
+    layout read as column 0 would yield ~1e18 "sequences"."""
+    if md.num_row_groups == 0:
+        return []
+    rg0 = md.row_group(0)
+    paths = [rg0.column(i).path_in_schema for i in range(rg0.num_columns)]
+    if column not in paths:
+        return None
+    idx = paths.index(column)
+    stats = (md.row_group(rg).column(idx).statistics for rg in range(md.num_row_groups))
+    return [(s.min, s.max) if s is not None and s.has_min_max else None for s in stats]
+
+
+def _stat_us(v) -> int:
+    """A ``ts`` statistic → epoch µs, flooring like read(). pyarrow yields a
+    datetime for a timestamp logical type (already truncated to µs) and an
+    int only for a raw int64 ns column."""
+    return _micros(v) if isinstance(v, _dt.datetime) else int(v) // 1000
 
 
 class ParquetReplayTransport:
-    """Replay a parquet events log as a JetStream stream. Lazy-opens in each
-    task (the object that crosses the pickle boundary is just config)."""
+    """Replay a parquet events log as a JetStream stream, columnar from file
+    to batch. The object that crosses the pickle boundary is just config;
+    each ``fetch`` opens the file afresh (a log rewritten in place is read as
+    it now is), reads only the row groups whose ``event_id`` statistics
+    overlap its slice, ``BATCH_ROWS`` rows at a time, and builds the message
+    columns with ``pyarrow.compute``. Memory stays at one batch, and the cost
+    follows the messages read, not the width of the sequence range."""
+
+    _COLUMNS = ["event_id", "ts", "user_id", "event_type", "props"]
 
     def __init__(self, path: str, stream: str):
         self.path = path
         self.stream = stream
 
-    def _read(self, start_seq: int | None = None, end_seq: int | None = None):
-        key = (self.path, self.stream, start_seq, end_seq)
-        if key in _REPLAY_CACHE:
-            return _REPLAY_CACHE[key]
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        # push the sequence range into the parquet read itself: row-group
-        # statistics prune groups outside [start, end], so a partition's
-        # task reads ~its slice of the FILE, not the whole file filtered
-        # after the fact (measured: the whole-file read per task is what
-        # capped fan-out speedup at 32 partitions, SCALING.md batch 10).
-        # This mirrors the live transport, which fetches only its slice.
-        preds = []
-        if start_seq is not None:
-            preds.append(pc.field("event_id") >= start_seq - 1)
-        if end_seq is not None:
-            preds.append(pc.field("event_id") <= end_seq - 1)
-        flt = functools.reduce(operator.and_, preds) if preds else None
-        t = pq.read_table(
-            self.path,
-            columns=["event_id", "ts", "user_id", "event_type", "props"],
-            filters=flt,
-        )
-        # Normalize ts to int64 nanoseconds while still columnar — the parquet
-        # flavor varies by writer (timestamp[us], timestamp[ns], raw int64 ns)
-        # and to_pydict() would yield datetime.datetime for µs columns, which
-        # the per-row loop must not have to special-case.
-        ts_idx = t.schema.get_field_index("ts")
-        ts_type = t.schema.field(ts_idx).type
-        if pa.types.is_timestamp(ts_type):
-            ns = pc.cast(pc.cast(t.column(ts_idx), pa.timestamp("ns")), pa.int64())
-            t = t.set_column(ts_idx, "ts", ns)
-        d = t.to_pydict()
-        rows = {}
-        for eid, ts_ns, uid, etype, props in zip(
-            d["event_id"], d["ts"], d["user_id"], d["event_type"], d["props"]
-        ):
-            seq = int(eid) + 1  # sequences start at 1, like JetStream
-            rows[seq] = (
-                f"{self.stream}.{etype}.u{uid}",
-                int(ts_ns),
-                # binary props (e.g. protobuf-encoded logs) pass through;
-                # string props encode like any NATS text payload
-                props if isinstance(props, (bytes, bytearray)) else props.encode("utf-8"),
-            )
-        while len(_REPLAY_CACHE) >= _REPLAY_CACHE_CAP:
-            _REPLAY_CACHE.pop(next(iter(_REPLAY_CACHE)))
-        _REPLAY_CACHE[key] = rows
-        return rows
+    def _event_id_stats(self, md) -> list[tuple | None]:
+        stats = _footer_stats(md, "event_id")
+        if stats is None:
+            raise BindError(f"replay log {self.path!r} has no 'event_id' column")
+        return stats
 
     def stream_info(self) -> tuple[int, int]:
-        import pyarrow.parquet as pq
+        """(first, last) sequence from the ``event_id`` row-group statistics,
+        no data read; a log written without them costs one ``min_max`` over
+        that column."""
+        with pq.ParquetFile(self.path) as pf:
+            stats = self._event_id_stats(pf.metadata)
+            if None in stats:
+                mm = pc.min_max(pf.read(columns=["event_id"]).column(0))
+                valid = mm["min"].is_valid
+                stats = [pa.array([mm["min"], mm["max"]]).to_numpy()] if valid else []
+        if not stats:
+            return (0, 0)
+        return (int(min(s[0] for s in stats)) + 1, int(max(s[1] for s in stats)) + 1)
 
-        # min/max from parquet row-group statistics — no data read. The
-        # event_id column is located BY NAME in the file schema: physical
-        # column 0 is whatever the writer put first (a ts-first layout
-        # would silently yield ~1e18 "sequences" here, and fetch()'s range
-        # loop would hang on them).
-        pf = pq.ParquetFile(self.path)
-        # physical leaf order via path_in_schema, not arrow schema order
-        idx = None
-        if pf.metadata.num_row_groups:
-            rg0 = pf.metadata.row_group(0)
-            for i in range(rg0.num_columns):
-                if rg0.column(i).path_in_schema == "event_id":
-                    idx = i
-                    break
-        if idx is None and pf.metadata.num_row_groups:
-            raise BindError(
-                f"replay log {self.path!r} has no 'event_id' column"
-            )
-        lo, hi = None, None
-        for rg in range(pf.metadata.num_row_groups):
-            col = pf.metadata.row_group(rg).column(idx)
-            if col.statistics is not None:
-                s = col.statistics
-                lo = s.min if lo is None else min(lo, s.min)
-                hi = s.max if hi is None else max(hi, s.max)
-        if lo is None:
-            rows = self._read()
-            if not rows:
-                return (0, 0)
-            return (min(rows), max(rows))
-        return (int(lo) + 1, int(hi) + 1)
+    def _messages(self, batch: pa.RecordBatch) -> pa.RecordBatch:
+        """One batch of the log → the transport batch contract."""
+        ts = batch["ts"]
+        if pa.types.is_timestamp(ts.type):
+            # the writer's flavour varies: timestamp[us], timestamp[ns] or
+            # raw int64 ns
+            ts = pc.cast(ts, pa.timestamp("ns"))
+        user = pc.binary_join_element_wise(
+            "u", pc.cast(batch["user_id"], pa.string()), ""
+        )
+        return pa.RecordBatch.from_arrays(
+            [
+                # sequences start at 1, like JetStream
+                pc.add(pc.cast(batch["event_id"], pa.int64()), 1),
+                pc.binary_join_element_wise(self.stream, batch["event_type"], user, "."),
+                pc.cast(ts, pa.int64()),
+                # binary props (e.g. protobuf-encoded logs) pass through;
+                # string props encode like any NATS text payload
+                pc.cast(batch["props"], pa.binary()),
+            ],
+            schema=MESSAGE_BATCH_SCHEMA,
+        )
 
-    def fetch(self, start_seq: int, end_seq: int) -> Iterator[tuple[int, str, int, bytes]]:
-        """Yield (seq, subject, ts_ns, payload) for the inclusive range,
-        skipping gaps."""
-        rows = self._read(start_seq, end_seq)
-        for seq in range(start_seq, end_seq + 1):
-            msg = rows.get(seq)
-            if msg is None:
-                continue  # gap-skip (ref:src/nats_scan.cpp:725-729)
-            yield (seq, msg[0], msg[1], msg[2])
+    def fetch(self, start_seq: int, end_seq: int) -> Iterator[pa.RecordBatch]:
+        """The messages with ``start_seq <= seq <= end_seq`` in batches of at
+        most ``BATCH_ROWS`` rows; a missing sequence is a gap
+        (ref:src/nats_scan.cpp:725-729). A row group without statistics is
+        read and filtered."""
+        lo_id, hi_id = start_seq - 1, end_seq - 1  # seq = event_id + 1
+        with pq.ParquetFile(self.path) as pf:
+            groups = [
+                rg
+                for rg, s in enumerate(self._event_id_stats(pf.metadata))
+                if s is None or (s[0] <= hi_id and s[1] >= lo_id)
+            ]
+            if not groups:
+                return
+            for batch in pf.iter_batches(
+                batch_size=BATCH_ROWS, row_groups=groups, columns=self._COLUMNS
+            ):
+                eid = batch["event_id"]
+                batch = batch.filter(
+                    pc.and_(pc.greater_equal(eid, lo_id), pc.less_equal(eid, hi_id))
+                )
+                if batch.num_rows:
+                    yield self._messages(batch)
 
     def resolve_time_bounds(
         self, start: int, end: int, lo_us: int | None, hi_us: int | None
@@ -255,49 +258,22 @@ class ParquetReplayTransport:
         rows iff its [ts_min, ts_max] intersects [lo, hi]; the union of
         the intersecting groups' event_id ranges is a superset by
         construction at ANY row order. One footer read, zero data pages,
-        zero probe fetches (the binary search's distinct-slice probes
-        also thrashed the FIFO slice cache — r10 ADVICE #4). Comparisons
-        floor sub-µs precision exactly like read()'s ``ts_ns // 1000``,
-        and a group missing statistics is conservatively included."""
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(self.path)
-        md = pf.metadata
-        if md.num_row_groups == 0:
+        zero probe fetches. Comparisons floor sub-µs precision exactly like
+        read(), and a group missing statistics is conservatively included."""
+        md = pq.read_metadata(self.path)
+        ts, eid = _footer_stats(md, "ts"), _footer_stats(md, "event_id")
+        if not ts or not eid:
             return (start, end)
-        ts_i = eid_i = None
-        rg0 = md.row_group(0)
-        for i in range(rg0.num_columns):
-            p = rg0.column(i).path_in_schema
-            if p == "ts":
-                ts_i = i
-            elif p == "event_id":
-                eid_i = i
-        if ts_i is None or eid_i is None:
-            return (start, end)
-
-        def _us(v) -> int:
-            # stats value → epoch µs, flooring like read()'s ns // 1000.
-            # pyarrow yields datetime for timestamp logical types (already
-            # truncated to µs) and int only for raw int64 ns columns.
-            if isinstance(v, _dt.datetime):
-                if v.tzinfo is not None:
-                    v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-                return (v - _EPOCH) // _dt.timedelta(microseconds=1)
-            return int(v) // 1000
-
         s0 = s1 = None
-        for rg in range(md.num_row_groups):
-            ts_s = md.row_group(rg).column(ts_i).statistics
-            eid_s = md.row_group(rg).column(eid_i).statistics
-            if ts_s is not None and ts_s.has_min_max:
-                if lo_us is not None and _us(ts_s.max) < lo_us:
+        for ts_s, eid_s in zip(ts, eid):
+            if ts_s is not None:
+                if lo_us is not None and _stat_us(ts_s[1]) < lo_us:
                     continue
-                if hi_us is not None and _us(ts_s.min) > hi_us:
+                if hi_us is not None and _stat_us(ts_s[0]) > hi_us:
                     continue
-            if eid_s is None or not eid_s.has_min_max:
+            if eid_s is None:
                 return (start, end)  # can't bound this group — widen fully
-            g0, g1 = int(eid_s.min) + 1, int(eid_s.max) + 1  # seq = eid + 1
+            g0, g1 = int(eid_s[0]) + 1, int(eid_s[1]) + 1  # seq = eid + 1
             s0 = g0 if s0 is None else min(s0, g0)
             s1 = g1 if s1 is None else max(s1, g1)
         if s0 is None:
@@ -443,7 +419,9 @@ class NatsLiveTransport:
         a full-stream fetch."""
         return _resolve_time_bounds(self, start, end, lo_us, hi_us)
 
-    def fetch(self, start_seq: int, end_seq: int):
+    def fetch(self, start_seq: int, end_seq: int) -> Iterator[pa.RecordBatch]:
+        """One Direct Get per sequence in the inclusive range, handed on as
+        batches of at most ``BATCH_ROWS`` rows like the replay transport's."""
         asyncio = self._client()
 
         async def _fetch():
@@ -507,9 +485,12 @@ class NatsLiveTransport:
                 await _close_bounded(nc, self.timeout)
             return out
 
-        return iter(
-            self._run(_fetch(), f"fetch({start_seq}-{end_seq}) on '{self.stream}'")
+        rows = self._run(_fetch(), f"fetch({start_seq}-{end_seq}) on '{self.stream}'")
+        columns = zip(*rows) if rows else [[]] * len(MESSAGE_BATCH_SCHEMA)
+        table = pa.Table.from_pydict(
+            dict(zip(MESSAGE_BATCH_SCHEMA.names, columns)), schema=MESSAGE_BATCH_SCHEMA
         )
+        return iter(table.to_batches(max_chunksize=BATCH_ROWS))
 
 
 def _make_transport(options: dict):
@@ -527,6 +508,18 @@ class SeqRangePartition(InputPartition):
     def __init__(self, start_seq: int, end_seq: int):
         self.start_seq = start_seq
         self.end_seq = end_seq
+
+
+def _seq_slices(lo: int, hi: int, n_parts: int) -> list[SeqRangePartition]:
+    """``[lo, hi]`` as at most ``n_parts`` contiguous slices, one Spark task
+    each (the parallel-scan upgrade over the reference's single thread,
+    ref:src/nats_scan.cpp:197-199; its roadmap lists parallel scanning,
+    ref:docs/GUIDE.md:484-488)."""
+    n = max(1, min(n_parts, hi - lo + 1))
+    width = (hi - lo + 1 + n - 1) // n
+    return [
+        SeqRangePartition(s, min(s + width - 1, hi)) for s in range(lo, hi + 1, width)
+    ]
 
 
 #: every option the source understands — unknown options are bind errors so a
@@ -591,57 +584,49 @@ class NatsScanBatchReader(DataSourceReader):
             start, end = transport.resolve_time_bounds(start, end, lo_us, hi_us)
         if end < start:
             return []
-        n = max(1, min(self.n_partitions, end - start + 1))
-        width = (end - start + 1 + n - 1) // n
-        return [
-            SeqRangePartition(s, min(s + width - 1, end))
-            for s in range(start, end + 1, width)
-        ]
+        return _seq_slices(start, end, self.n_partitions)
 
     def read(self, partition: SeqRangePartition):
-        """Yield Arrow RecordBatches (the DataSource fast path — per-row
-        tuple yields cost ~10× in pickling) built vectorized from the
-        transport's messages."""
-        import pyarrow as pa
-
+        """Yield one Arrow RecordBatch of the five base columns per
+        transport batch, so at most ``BATCH_ROWS`` rows each (the DataSource
+        fast path — per-row tuple yields cost ~10× in pickling). The subject
+        substring (ref:src/nats_scan.cpp:741-746) and the exact µs time
+        bounds apply as one ``pyarrow.compute`` mask; a message without a
+        timestamp carries ts_nats NULL — never epoch zero — and a time bound
+        excludes it (SQL comparison-with-NULL)."""
         transport = _make_transport(self.options)
         lo_us = _opt_ts_us(self.options.get("start_time"))
         hi_us = _opt_ts_us(self.options.get("end_time"))
-
-        seqs: list[int] = []
-        subjects: list[str] = []
-        ts_us_l: list[int] = []
-        payloads: list[bytes] = []
-        for seq, subject, ts_ns, payload in transport.fetch(
-            partition.start_seq, partition.end_seq
-        ):
-            if self.subject and self.subject not in subject:
-                continue  # substring filter (ref:src/nats_scan.cpp:741-746)
-            # a message without a timestamp header carries ts_nats NULL —
-            # never epoch zero, which a start_time filter would silently
-            # drop while unbounded scans showed a bogus 1970 timestamp
-            ts_us = None if ts_ns is None else ts_ns // 1000
-            if (lo_us is not None or hi_us is not None) and ts_us is None:
-                continue  # SQL comparison-with-NULL semantics: excluded
-            if lo_us is not None and ts_us < lo_us:
-                continue
-            if hi_us is not None and ts_us > hi_us:
-                continue
-            seqs.append(seq)
-            subjects.append(subject)
-            ts_us_l.append(ts_us)
-            payloads.append(payload)
-
-        if not seqs:
-            return
-        cols = [
-            pa.array([self.stream] * len(seqs), pa.string()),
-            pa.array(subjects, pa.string()),
-            pa.array(seqs, pa.int64()),
-            pa.array(ts_us_l, pa.timestamp("us")),
-            pa.array(payloads, pa.binary()),
-        ]
-        yield pa.RecordBatch.from_arrays(cols, names=message_schema().names)
+        us, names = pa.timestamp("us"), message_schema().names
+        for batch in transport.fetch(partition.start_seq, partition.end_seq):
+            # floor ns → µs, like the row-group statistics in resolve_time_bounds
+            ts = pc.cast(
+                pc.floor_temporal(
+                    pc.cast(batch["ts_ns"], pa.timestamp("ns")), unit="microsecond"
+                ),
+                us,
+            )
+            preds = []
+            if self.subject:
+                preds.append(pc.match_substring(batch["subject"], self.subject))
+            if lo_us is not None:
+                preds.append(pc.greater_equal(ts, pa.scalar(lo_us, us)))
+            if hi_us is not None:
+                preds.append(pc.less_equal(ts, pa.scalar(hi_us, us)))
+            out = pa.RecordBatch.from_arrays(
+                [
+                    pa.repeat(self.stream, batch.num_rows),
+                    batch["subject"],
+                    batch["seq"],
+                    ts,
+                    batch["payload"],
+                ],
+                names=names,
+            )
+            if preds:
+                out = out.filter(functools.reduce(pc.and_, preds))
+            if out.num_rows:
+                yield out
 
 
 class NatsScanStreamReader(DataSourceStreamReader):
@@ -674,21 +659,12 @@ class NatsScanStreamReader(DataSourceStreamReader):
         return {"seq": max(start, last + 1)}
 
     def partitions(self, start: dict, end: dict):
-        # N contiguous slices per micro-batch — the same parallel-scan
-        # upgrade the batch reader applies (the reference is single-threaded,
-        # ref:src/nats_scan.cpp:197-199; its roadmap lists parallel scanning,
-        # ref:docs/GUIDE.md:484-488). A catch-up batch over a long backlog
-        # fans out instead of serializing through one task.
+        # sliced like the batch reader's range: a catch-up batch over a long
+        # backlog fans out instead of serializing through one task
         lo, hi = start["seq"], end["seq"] - 1
         if hi < lo:
             return [SeqRangePartition(lo, hi)]
-        n_parts = int(self.options.get("partitions", "8"))
-        n = max(1, min(n_parts, hi - lo + 1))
-        width = (hi - lo + 1 + n - 1) // n
-        return [
-            SeqRangePartition(s, min(s + width - 1, hi))
-            for s in range(lo, hi + 1, width)
-        ]
+        return _seq_slices(lo, hi, self._batch_reader.n_partitions)
 
     def read(self, partition: SeqRangePartition):
         if partition.end_seq < partition.start_seq:
@@ -719,7 +695,21 @@ class NatsJetStreamDataSource(DataSource):
 
 
 def register(spark) -> None:
-    spark.dataSource.register(NatsJetStreamDataSource)
+    """Register the source on ``spark``. Spark checks the name against the
+    thread's active session, not the target, so ``spark`` is made the active
+    session for the call: otherwise registering on a ``newSession()`` clone
+    of a session that already has the source raises
+    ``DATA_SOURCE_ALREADY_EXISTS`` and leaves the clone without it."""
+    j_session = spark._jvm.org.apache.spark.sql.classic.SparkSession
+    previous = j_session.getActiveSession()
+    j_session.setActiveSession(spark._jsparkSession)
+    try:
+        spark.dataSource.register(NatsJetStreamDataSource)
+    finally:
+        if previous.isDefined():
+            j_session.setActiveSession(previous.get())
+        else:
+            j_session.clearActiveSession()
 
 
 def _names(v) -> list[str]:

@@ -29,6 +29,9 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
 - payload extraction stays in ``functions/``: no module under ``sources/``
   imports ``json`` or ``path_extractor`` (a second extractor there gave
   different values than ``get_json_object`` for the same log).
+- the ``sources/`` readers stay columnar: no ``to_pydict(``, ``to_pylist(``
+  or ``.as_py(`` there (a per-message Python decode made the replay
+  reader's memory grow with partition size).
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -239,3 +242,14 @@ def test_extraction_stays_in_functions():
             if any(m.split(".")[0] == "json" or m == "path_extractor" for m in names):
                 bad.append(f"{_rel(p)}:{n.lineno}")
     assert not bad, f"payload extraction outside functions/: {bad}"
+
+
+def test_sources_stay_columnar():
+    bad = [
+        f"{_rel(p)}:{i}"
+        for p in _py_files()
+        if _rel(p).startswith("sources" + os.sep)
+        for i, line in _code_lines(p)
+        if re.search(r"to_pydict\(|to_pylist\(|\.as_py\(", line)
+    ]
+    assert not bad, f"per-row Python conversion in a source reader: {bad}"

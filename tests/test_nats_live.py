@@ -9,10 +9,11 @@ speaks the slice of the nats-py API the transport uses — async
 observable behavior matches the replay transport on the same fixture:
 
 - ``stream_info`` returns (first_seq, last_seq) from the broker state
-- ``fetch`` yields (seq, subject, ts_ns, payload), NOT_FOUND → gap-skip
-  (the reference's semantics, ref:src/nats_scan.cpp:725-729)
+- ``fetch`` yields Arrow batches of (seq, subject, ts_ns, payload), at most
+  ``BATCH_ROWS`` rows each; NOT_FOUND → gap-skip (the reference's
+  semantics, ref:src/nats_scan.cpp:725-729)
 - ``Nats-Time-Stamp`` parses to EXACT epoch ns (9-digit RFC3339 fractions);
-  a missing header yields ts_ns=0
+  a missing header yields ts_ns NULL
 - a stalled broker raises BindError (timeout), never hangs and never
   masquerades as a gap
 - connections close even on error paths (no fd leak per Spark task)
@@ -31,9 +32,22 @@ import pytest
 
 from duckdb_nats_jetstream_spark.errors import BindError
 from duckdb_nats_jetstream_spark.sources.nats_source import (
+    BATCH_ROWS,
+    MESSAGE_BATCH_SCHEMA,
     NatsLiveTransport,
     _parse_rfc3339_ns,
 )
+
+
+def _rows(batches) -> list[tuple]:
+    """The messages of a ``fetch``, after checking each batch against the
+    transports' batch contract."""
+    out = []
+    for b in batches:
+        assert b.schema == MESSAGE_BATCH_SCHEMA
+        assert 0 < b.num_rows <= BATCH_ROWS
+        out += [tuple(r.values()) for r in b.to_pylist()]
+    return out
 
 
 # --- fake nats-py -------------------------------------------------------------
@@ -138,7 +152,7 @@ def test_stream_info_reports_broker_state(broker):
 
 def test_fetch_yields_rows_and_gap_skips(broker):
     t = NatsLiveTransport("nats://fake:4222", "events")
-    rows = list(t.fetch(1, 5))
+    rows = _rows(t.fetch(1, 5))
     assert [r[0] for r in rows] == [1, 2, 4, 5]  # 3 gap-skipped
     assert broker.get_calls == [1, 2, 3, 4, 5]  # every seq probed once
     assert rows[0] == (
@@ -158,7 +172,7 @@ def test_fetch_yields_rows_and_gap_skips(broker):
 
 def test_fetch_subrange_probes_only_requested_seqs(broker):
     t = NatsLiveTransport("nats://fake:4222", "events")
-    rows = list(t.fetch(2, 4))
+    rows = _rows(t.fetch(2, 4))
     assert [r[0] for r in rows] == [2, 4]
     assert broker.get_calls == [2, 3, 4]
 
@@ -170,7 +184,7 @@ def test_fetch_missing_stream_errors_not_empty(broker):
     the sequence loop."""
     t = NatsLiveTransport("nats://fake:4222", "eventz")  # typo'd stream
     with pytest.raises(BindError, match="eventz.*not accessible"):
-        list(t.fetch(1, 5))
+        _rows(t.fetch(1, 5))
     assert broker.get_calls == []  # errored before any per-seq probe
     assert broker.closed == 1  # connection still released
 
@@ -181,10 +195,10 @@ def test_fetch_matches_replay_transport_row_shape(broker, sf_dir):
         ParquetReplayTransport,
     )
 
-    live_rows = list(NatsLiveTransport("nats://fake:4222", "events").fetch(1, 2))
+    live_rows = _rows(NatsLiveTransport("nats://fake:4222", "events").fetch(1, 2))
     replay = ParquetReplayTransport(f"{sf_dir}/events.parquet", "events")
     lo, _hi = replay.stream_info()
-    replay_rows = list(replay.fetch(lo, lo + 1))
+    replay_rows = _rows(replay.fetch(lo, lo + 1))
     assert len(live_rows) and len(replay_rows)
     for rows in (live_rows, replay_rows):
         for seq, subject, ts_ns, payload in rows:
@@ -202,7 +216,7 @@ def test_stalled_fetch_raises_bind_error_not_gap(monkeypatch):
     ).install(monkeypatch)
     t = NatsLiveTransport("nats://fake:4222", "events", timeout=0.05)
     with pytest.raises(BindError, match="timed out"):
-        list(t.fetch(1, 1))
+        _rows(t.fetch(1, 1))
     assert broker.closed == 1  # connection released on the error path
 
 
@@ -275,7 +289,7 @@ def test_connection_drop_mid_fetch_raises_not_truncates(monkeypatch):
     monkeypatch.setattr(_FakeJetStream, "get_msg", flaky)
     t = NatsLiveTransport("nats://fake:4222", "events")
     with pytest.raises(BindError, match="failed"):
-        list(t.fetch(1, 2))
+        _rows(t.fetch(1, 2))
     assert broker.closed == 1
 
 
@@ -343,7 +357,7 @@ def test_empty_stream_yields_zero_rows_not_error(monkeypatch):
     monkeypatch.setattr(_FakeJetStream, "stream_info", stream_info)
     t = NatsLiveTransport("nats://fake:4222", "events")
     assert t.stream_info() == (0, 0)
-    assert list(t.fetch(1, 0)) == []
+    assert _rows(t.fetch(1, 0)) == []
     assert broker.closed >= 1
 
 
@@ -365,7 +379,7 @@ def test_connect_failure_wrapped_in_bind_error(monkeypatch):
     with pytest.raises(BindError, match="nats://down:4222"):
         t.stream_info()
     with pytest.raises(BindError, match="nats://down:4222"):
-        list(t.fetch(1, 3))
+        _rows(t.fetch(1, 3))
 
 
 def test_malformed_timestamp_header_is_bind_error(monkeypatch):
@@ -374,5 +388,5 @@ def test_malformed_timestamp_header_is_bind_error(monkeypatch):
     ).install(monkeypatch)
     t = NatsLiveTransport("nats://fake:4222", "events")
     with pytest.raises(BindError, match="Nats-Time-Stamp"):
-        list(t.fetch(1, 1))
+        _rows(t.fetch(1, 1))
     assert broker.closed == 1

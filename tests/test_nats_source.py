@@ -291,16 +291,6 @@ def test_stream_info_locates_event_id_by_name(spark, sf_dir, tmp_path):
     assert b[1] < 10_000_000  # sequences, not nanosecond timestamps
 
 
-def test_replay_cache_is_bounded():
-    from duckdb_nats_jetstream_spark.sources import nats_source as NS
-
-    NS._REPLAY_CACHE.clear()
-    t = NS.ParquetReplayTransport("/root/testdata/sf0.001/events.parquet", "events")
-    for i in range(1, 40):
-        t._read(i, i + 1)
-    assert len(NS._REPLAY_CACHE) <= NS._REPLAY_CACHE_CAP
-
-
 def test_time_bounds_accept_z_suffix_and_match_naive(spark, sf_dir):
     rows = (
         spark.read.format("nats_jetstream")
@@ -343,6 +333,7 @@ def test_resolve_time_bounds_probe_count_is_logarithmic(sf_dir):
     """The driver-side resolution must probe O(log N) slices, never fetch
     the stream (one round-trip per message on the live transport)."""
     from duckdb_nats_jetstream_spark.sources.nats_source import (
+        MESSAGE_BATCH_SCHEMA,
         ParquetReplayTransport,
         _opt_ts_us,
         _resolve_time_bounds,
@@ -355,7 +346,9 @@ def test_resolve_time_bounds_probe_count_is_logarithmic(sf_dir):
     class Counting:
         def fetch(self, s, e):
             calls.append((s, e))
-            return inner.fetch(s, e)
+            for batch in inner.fetch(s, e):
+                assert batch.schema == MESSAGE_BATCH_SCHEMA
+                yield batch
 
     lo = _opt_ts_us("2024-01-04T00:00:00")
     hi = _opt_ts_us("2024-01-09T00:00:00")
@@ -391,25 +384,30 @@ _EDGE_PAYLOADS = [
 ]
 
 
-def _write_edge_log(path: str) -> None:
+def _write_log(path: str, event_ids, props, row_group_size=None) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    n = len(_EDGE_PAYLOADS)
+    n = len(event_ids)
     pq.write_table(
         pa.table(
             {
-                "event_id": pa.array(range(n), pa.int64()),
+                "event_id": pa.array(event_ids, pa.int64()),
                 "ts": pa.array(
                     [1_704_067_200 * 10**9 + i for i in range(n)], pa.timestamp("ns")
                 ),
                 "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
                 "event_type": pa.array(["e"] * n),
-                "props": pa.array(_EDGE_PAYLOADS),
+                "props": pa.array(props),
             }
         ),
         path,
+        row_group_size=row_group_size,
     )
+
+
+def _write_edge_log(path: str) -> None:
+    _write_log(path, list(range(len(_EDGE_PAYLOADS))), _EDGE_PAYLOADS)
 
 
 def test_edge_payloads_extract_like_message_scan(spark, tmp_path):
@@ -504,8 +502,8 @@ def test_time_bounds_on_non_monotone_replay_log(spark, tmp_path):
 
 def test_replay_time_resolution_is_probe_free_and_prunes(tmp_path, sf_dir):
     """The replay transport's resolution must read ONLY the footer (the
-    binary search's distinct-slice probes thrashed the FIFO decode cache —
-    r10 ADVICE #4) and must prune row groups on a time-SORTED log."""
+    binary search reads data for each of its probes — r10 ADVICE #4) and
+    must prune row groups on a time-SORTED log."""
     from duckdb_nats_jetstream_spark.sources.nats_source import (
         ParquetReplayTransport,
         _opt_ts_us,
@@ -595,3 +593,77 @@ def test_replay_time_resolution_includes_statless_groups(tmp_path):
     )
     # superset must cover the qualifying rows AND the stats-less group
     assert s0 <= 11 and s1 == last
+
+
+# --- the columnar replay reader ------------------------------------------------
+
+
+def _read_batches(path: str, **options):
+    """Every batch the batch reader yields over the log, read in-process."""
+    reader = NatsScanBatchReader({"stream": "events", "replay_path": path, **options})
+    return [b for p in reader.partitions() for b in reader.read(p)]
+
+
+def test_replay_log_rewritten_in_place_reads_new_payloads(tmp_path):
+    """A replay log rewritten in place is read as it now is by the same
+    worker process: nothing decoded from the old file is reused."""
+    path = str(tmp_path / "events.parquet")
+    _write_log(path, list(range(5)), [f"old{i}" for i in range(5)])
+    assert len(_read_batches(path, partitions="1")) == 1
+    _write_log(path, list(range(5)), [f"new{i}" for i in range(5)])
+    payloads = [p for b in _read_batches(path, partitions="1") for p in b["payload"].to_pylist()]
+    assert sorted(payloads) == [f"new{i}".encode() for i in range(5)]
+
+
+def test_sparse_sequence_span_reads_its_messages(tmp_path):
+    """The read costs what its messages cost, not the width of the sequence
+    range: a 2-message log with event_ids 0 and 2**40 reads its 2 rows. It
+    runs in a subprocess under a deadline, because a reader that walks every
+    sequence number of the range would not finish."""
+    import os
+    import subprocess
+    import sys
+
+    path = str(tmp_path / "sparse.parquet")
+    _write_log(path, [0, 2**40], ["a", "b"])
+    code = (
+        "from duckdb_nats_jetstream_spark.sources.nats_source import NatsScanBatchReader\n"
+        f"r = NatsScanBatchReader({{'stream': 'events', 'replay_path': {path!r}}})\n"
+        "print(sorted(s for p in r.partitions() for b in r.read(p) for s in b['seq'].to_pylist()))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=60
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == f"[1, {2**40 + 1}]"
+
+
+def test_read_yields_bounded_batches(tmp_path):
+    """Every batch ``read`` yields has at most 2,048 rows (the reference's
+    ``STANDARD_VECTOR_SIZE``), also when one partition spans row groups
+    larger than that."""
+    path = str(tmp_path / "events.parquet")
+    n = 5000
+    _write_log(path, list(range(n)), ["{}"] * n, row_group_size=3000)
+    batches = _read_batches(path, partitions="1")
+    assert sum(b.num_rows for b in batches) == n
+    assert len(batches) > 1
+    assert all(b.num_rows <= 2048 for b in batches)
+
+
+def test_register_on_session_and_its_clone(spark, sf_dir):
+    """``register`` works on a session and on its ``newSession()`` clone, and
+    both then load the source."""
+    clone = spark.newSession()
+    register(spark)
+    register(clone)
+    want = message_scan(spark, sf_dir).count()
+    for session in (spark, clone):
+        df = (
+            session.read.format("nats_jetstream")
+            .option("stream", "events")
+            .option("replay_path", _events(sf_dir))
+            .load()
+        )
+        assert df.count() == want
