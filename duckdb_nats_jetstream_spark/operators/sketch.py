@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from duckdb_nats_jetstream_spark.functions.text import sql_norm, tokens
-from duckdb_nats_jetstream_spark.tables import cached
 
 
 def _cell(token_col: F.Column, d: int, width_hex: int) -> F.Column:
@@ -118,13 +117,11 @@ def countmin_estimates(
             )
         ).alias("s"),
     ).select("t", "true_n", F.col("s.d").alias("d"), F.col("s.cell").alias("cell"))
-    out = (
+    return (
         probes.join(F.broadcast(sketch), ["d", "cell"])
         .groupBy(F.col("t").alias("token"), "true_n")
         .agg(F.min("n").alias("est_n"))
     )
-    with cached(toks):
-        return out.localCheckpoint(eager=True)
 
 
 def sql_countmin_estimates(

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from duckdb_nats_jetstream_spark.errors import require
 from duckdb_nats_jetstream_spark.functions.json_extract import json_extract
-from duckdb_nats_jetstream_spark.tables import read_parquet, table_path
+from duckdb_nats_jetstream_spark.tables import canonical_ts, read_parquet, table_path
 
 #: DuckDB-oracle equivalent of the events→message-log mapping. Kept here as
 #: the single source of truth; every oracle SQL that scans the stream embeds
@@ -94,6 +94,12 @@ def _micros(t: _dt.datetime) -> int:
     if t.tzinfo is not None:
         t = t.astimezone(_dt.timezone.utc).replace(tzinfo=None)
     return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+
+
+def _first_ns(t_us: int) -> int:
+    """The least ns instant whose µs truncation toward zero is >= ``t_us``:
+    below the epoch a µs holds the 999 ns before it, not after."""
+    return t_us * 1000 if t_us > 0 else (t_us - 1) * 1000 + 1
 
 
 def register_scan_view(
@@ -215,13 +221,13 @@ def message_scan(
         ev = ev.filter(F.col("event_id") >= F.lit(int(start_seq) - 1))
     if end_seq is not None:
         ev = ev.filter(F.col("event_id") <= F.lit(int(end_seq) - 1))
-    # Time bounds at µs granularity (ts_nats is µs-truncated, the same ns→µs
-    # narrowing the reference does at ref:src/nats_scan.cpp:749):
-    # µs-trunc(x) >= t0  ⟺  x_ns >= t0µs·1000;
-    # µs-trunc(x) <= t1  ⟺  x_ns <  (t1µs+1)·1000.
+    # Time bounds at µs granularity (ts_nats is µs-truncated toward zero, the
+    # same ns→µs narrowing the reference does at ref:src/nats_scan.cpp:749):
+    # µs-trunc(x) >= t0  ⟺  x_ns >= _first_ns(t0µs);
+    # µs-trunc(x) <= t1  ⟺  x_ns <  _first_ns(t1µs+1).
     if start_time is not None:
         t0 = _as_timestamp(start_time)
-        bound = F.lit(_micros(t0) * 1000) if ts_raw_ns else _ts_literal(t0)
+        bound = F.lit(_first_ns(_micros(t0))) if ts_raw_ns else _ts_literal(t0)
         ev = ev.filter(F.col("ts") >= bound)
     if end_time is not None:
         t1 = _as_timestamp(end_time)
@@ -235,7 +241,7 @@ def message_scan(
             # reference's driver-side resolution.
             raw = read_parquet(spark, table_path(sf_dir, "events"))
             at_or_after = (
-                F.col("ts") >= F.lit(_micros(t1) * 1000)
+                F.col("ts") >= F.lit(_first_ns(_micros(t1)))
                 if ts_raw_ns
                 else F.col("ts") >= _ts_literal(t1)
             )
@@ -246,19 +252,14 @@ def message_scan(
                 .drop("__b")
             )
         elif ts_raw_ns:
-            ev = ev.filter(F.col("ts") < F.lit((_micros(t1) + 1) * 1000))
+            ev = ev.filter(F.col("ts") < F.lit(_first_ns(_micros(t1) + 1)))
         else:
             ev = ev.filter(F.col("ts") <= _ts_literal(t1))
 
     # Canonicalize ts to TimestampType AFTER the pushdown filters above, so
     # the range predicates reach the parquet scan on the stored column while
     # every consumer sees one timestamp flavor (schema.py BASE_FIELDS).
-    if ts_raw_ns:
-        ev = ev.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    elif ts_ntz:
-        ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
-
-    df = ev.select(*message_projection(stream, F.col("ts")))
+    df = ev.select(*message_projection(stream, canonical_ts("ts", ts_type)))
     if subject is not None:
         # substring containment, evaluated post-scan exactly like the
         # reference's post-fetch filter (ref:src/nats_scan.cpp:741-746).

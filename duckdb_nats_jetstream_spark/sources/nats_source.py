@@ -102,7 +102,8 @@ def _resolve_time_bounds(
     timestamp are invisible to the search (read()'s exact filter excludes
     them whenever a bound is set). A probe takes the first timestamped
     message in the order ``fetch`` yields them, which the live transport
-    yields in sequence order."""
+    yields in sequence order; its ns timestamp truncates toward zero to µs,
+    as in every reader, pre-1970 included."""
 
     def first_ts_at_or_after(s: int):
         step = 1
@@ -112,7 +113,7 @@ def _resolve_time_bounds(
                 stamped = batch.filter(pc.is_valid(batch["ts_ns"])).slice(0, 1)
                 if stamped.num_rows:
                     seq = int(stamped["seq"].to_numpy()[0])
-                    return seq, int(stamped["ts_ns"].to_numpy()[0]) // 1000
+                    return seq, _stat_us(int(stamped["ts_ns"].to_numpy()[0]))
             cur += step
             step = min(step * 8, 1 << 16)
         return None
@@ -159,10 +160,16 @@ def _footer_stats(md, column: str) -> list[tuple | None] | None:
 
 
 def _stat_us(v) -> int:
-    """A ``ts`` statistic → epoch µs, flooring like read(). pyarrow yields a
-    datetime for a timestamp logical type (already truncated to µs) and an
-    int only for a raw int64 ns column."""
-    return _micros(v) if isinstance(v, _dt.datetime) else int(v) // 1000
+    """A ``ts`` statistic or epoch-ns int → epoch µs, truncated toward zero
+    like read() and every other reader (``tables.canonical_ts``, DuckDB),
+    pre-1970 included. pyarrow yields a pandas ``Timestamp`` (ns in
+    ``.value``) for TIMESTAMP(NANOS), a datetime for MILLIS/MICROS, and an
+    int for a raw int64 ns column."""
+    if isinstance(v, _dt.datetime):
+        if not hasattr(v, "value"):
+            return _micros(v)
+        v = v.value
+    return int(v) // 1000 if v >= 0 else -(-int(v) // 1000)
 
 
 class ParquetReplayTransport:
@@ -258,8 +265,9 @@ class ParquetReplayTransport:
         rows iff its [ts_min, ts_max] intersects [lo, hi]; the union of
         the intersecting groups' event_id ranges is a superset by
         construction at ANY row order. One footer read, zero data pages,
-        zero probe fetches. Comparisons floor sub-µs precision exactly like
-        read(), and a group missing statistics is conservatively included."""
+        zero probe fetches. Comparisons truncate sub-µs precision toward zero
+        exactly like read(), and a group missing statistics is
+        conservatively included."""
         md = pq.read_metadata(self.path)
         ts, eid = _footer_stats(md, "ts"), _footer_stats(md, "event_id")
         if not ts or not eid:
@@ -593,19 +601,14 @@ class NatsScanBatchReader(DataSourceReader):
         substring (ref:src/nats_scan.cpp:741-746) and the exact µs time
         bounds apply as one ``pyarrow.compute`` mask; a message without a
         timestamp carries ts_nats NULL — never epoch zero — and a time bound
-        excludes it (SQL comparison-with-NULL)."""
+        excludes it (SQL comparison-with-NULL). The ns timestamp truncates
+        toward zero to µs, as in every reader, pre-1970 included."""
         transport = _make_transport(self.options)
         lo_us = _opt_ts_us(self.options.get("start_time"))
         hi_us = _opt_ts_us(self.options.get("end_time"))
         us, names = pa.timestamp("us"), message_schema().names
         for batch in transport.fetch(partition.start_seq, partition.end_seq):
-            # floor ns → µs, like the row-group statistics in resolve_time_bounds
-            ts = pc.cast(
-                pc.floor_temporal(
-                    pc.cast(batch["ts_ns"], pa.timestamp("ns")), unit="microsecond"
-                ),
-                us,
-            )
+            ts = pc.cast(pc.cast(batch["ts_ns"], pa.timestamp("ns")), us, safe=False)
             preds = []
             if self.subject:
                 preds.append(pc.match_substring(batch["subject"], self.subject))

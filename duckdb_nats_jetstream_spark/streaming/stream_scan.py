@@ -11,54 +11,22 @@ Spark gives them natively:
 - partitioned file/DataSource streams = the parallel scan.
 
 The stream carries the same 5-column message schema as the batch scan, so
-every extraction/filter operator composes unchanged on either.
+every extraction/filter operator composes unchanged on either; ``ts`` is
+typed and narrowed by the batch reads' own ``tables`` helpers, so ns
+timestamps truncate toward zero to µs, as in every reader, pre-1970 included.
 """
 
 from __future__ import annotations
+
+import glob
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from duckdb_nats_jetstream_spark.functions.json_extract import json_extract
 from duckdb_nats_jetstream_spark.session import scoped_conf
 from duckdb_nats_jetstream_spark.sinks import _prunable_timestamps
-
-def _events_raw_ts_type(log_dir: str) -> T.DataType:
-    """Inspect one parquet file to learn the stored ts flavor — streaming
-    reads require a declared schema, and the driver's writer has produced
-    both TIMESTAMP(NANOS) (Spark: long under nanosAsLong) and timestamp[us]
-    naive (Spark: TIMESTAMP_NTZ). Declaring the wrong one fails the scan,
-    so an EMPTY directory is an error, not a guess (r09 review: guessing
-    LongType on an empty live-tail dir made the first real micro-batch
-    fail with a parquet conversion error once timestamp-flavored files
-    appeared; pass ``ts_type`` to :func:`message_stream` to start a
-    stream ahead of its first file). The flavor is the column's parquet
-    physical and logical type, as in ``tables._footer_schema``: pyarrow
-    reports an INT96 column as ``timestamp[ns]``, but Spark reads INT96 as
-    TIMESTAMP, not long."""
-    import glob
-    import json
-    import os
-
-    import pyarrow.parquet as pq
-
-    candidates = sorted(glob.glob(os.path.join(log_dir, "*.parquet")))
-    if not candidates:
-        raise ValueError(
-            f"message_stream: no *.parquet in {log_dir!r} to infer the ts "
-            "flavor from — pass ts_type= explicitly (LongType for "
-            "ns-as-long logs, TimestampNTZType/TimestampType for "
-            "timestamp-encoded logs) to tail a not-yet-written directory"
-        )
-    with pq.ParquetFile(candidates[0]) as pf:
-        ts = {c.path: c for c in map(pf.schema.column, range(len(pf.schema)))}["ts"]
-    if ts.physical_type == "INT96":
-        return T.TimestampType()
-    logical = json.loads(ts.logical_type.to_json())
-    if logical["Type"] != "Timestamp" or logical["timeUnit"] == "nanoseconds":
-        return T.LongType()  # ns-as-long
-    if not logical["isAdjustedToUTC"]:
-        return T.TimestampNTZType()
-    return T.TimestampType()
+from duckdb_nats_jetstream_spark.tables import NANOS_AS_LONG, canonical_ts, stored_types
 
 
 def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
@@ -89,33 +57,38 @@ def message_stream(
     new message batches (the live-tail model). ``ts_nats`` is canonical
     TimestampType whatever the stored flavor (schema.py BASE_FIELDS).
 
-    ``ts_type`` overrides the file-sniffed flavor — required to tail a
-    directory that has no files yet. NB: the ns-as-long path sets the
-    SESSION conf ``spark.sql.legacy.parquet.nanosAsLong`` (Spark offers
-    no per-read form); it is set only when actually needed so a
-    timestamp-flavored stream doesn't silently change how unrelated
-    TIMESTAMP(NANOS) reads in the same session decode (r09 review)."""
+    ``ts_type`` overrides the footer's flavor — required to tail a
+    directory that has no files yet. NB: an ns-as-long log sets the SESSION
+    conf ``tables.NANOS_AS_LONG`` (Spark offers no per-read form), only
+    when needed, as the batch reads do, so a timestamp-flavored stream
+    leaves unrelated TIMESTAMP(NANOS) reads on the session as they were."""
     if ts_type is None:
-        ts_type = _events_raw_ts_type(log_dir)
-    if isinstance(ts_type, T.LongType):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # a wrong declared flavor fails the scan at its first file, so an
+        # EMPTY directory is an error, not a guess
+        files = sorted(glob.glob(os.path.join(log_dir, "*.parquet")))
+        ts_type = stored_types(spark, files[0])[0].get("ts") if files else None
+        if ts_type is None:
+            raise ValueError(
+                f"message_stream: no *.parquet in {log_dir!r} with a ts column to "
+                "infer the ts flavor from — pass ts_type= explicitly (LongType for "
+                "ns-as-long logs, TimestampNTZType/TimestampType for "
+                "timestamp-encoded logs) to tail a not-yet-written directory"
+            )
+    elif isinstance(ts_type, T.LongType):
+        spark.conf.set(NANOS_AS_LONG, "true")
     reader = spark.readStream.schema(_events_raw_schema(ts_type)).format("parquet")
     if max_files_per_trigger is not None:
         # bounds each micro-batch (availableNow honors it too) — the knob
         # tests use to force multi-batch state round-trips
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.load(log_dir)
-    if isinstance(ts_type, T.LongType):
-        ts_nats = F.timestamp_micros(F.expr("ts div 1000"))
-    else:
-        ts_nats = F.col("ts").cast("timestamp")
     # the shared events→message mapping — ONE definition with the batch
     # scan and the oracle CTE (see message_scan.message_projection)
     from duckdb_nats_jetstream_spark.sources.message_scan import (
         message_projection,
     )
 
-    df = raw.select(*message_projection(stream, ts_nats))
+    df = raw.select(*message_projection(stream, canonical_ts("ts", ts_type)))
     if subject is not None:
         df = df.filter(F.col("subject").contains(subject))
     if json_fields:

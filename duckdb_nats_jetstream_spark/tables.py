@@ -74,13 +74,25 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
-def _footer_schema(spark: SparkSession, path: str):
-    """``(schema, ns_cols)`` from one parquet file's footer: the schema
-    ``spark.read.parquet`` infers, and the columns stored as
-    TIMESTAMP(NANOS), which Spark reads only as long, under ``nanosAsLong``.
-    ``schema`` is None when the footer holds a type the mapping leaves to
-    Spark's inference: INT96, one :func:`_left_to_inference` names, or one
-    without an Arrow→Spark conversion (unsigned ints, ...)."""
+#: Spark reads a TIMESTAMP(NANOS) parquet column only as long, and only with
+#: this session conf, which stays set: it is read when a lazy frame EXECUTES,
+#: so scoping it would make a plan depend on when an action runs. Another
+#: ns file read plainly on the session then gives raw int64 nanos.
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def stored_types(spark: SparkSession, path: str):
+    """``(types, ns_cols)`` from one parquet file's footer — each top-level
+    column's Spark type as ``spark.read.parquet`` infers it, and the columns
+    stored as TIMESTAMP(NANOS) — setting :data:`NANOS_AS_LONG` when there are
+    any. Every read of the message log, batch and streaming, declares its
+    types through here. A timestamp maps by its parquet types, not pyarrow's
+    (INT96 reads as ``timestamp[ns]`` there): INT96 → timestamp under
+    ``int96AsTimestamp``; NANOS → long; MILLIS/MICROS not adjusted to UTC →
+    timestamp_ntz under ``inferTimestampNTZ``; else timestamp. A type is None
+    where the mapping leaves it to Spark's inference: INT96 with that conf
+    off, one :func:`_left_to_inference` names, or one without an Arrow→Spark
+    conversion (unsigned ints, ...)."""
     import json
 
     import pyarrow.parquet as pq
@@ -91,39 +103,44 @@ def _footer_schema(spark: SparkSession, path: str):
     with pq.ParquetFile(path) as pf:
         arrow = pf.schema_arrow
         cols = {c.path: c for c in map(pf.schema.column, range(len(pf.schema)))}
-    # top-level INT64 timestamps: {name: {"timeUnit", "isAdjustedToUTC"}}
-    ts = {
-        f.name: json.loads(cols[f.name].logical_type.to_json())
-        for f in arrow
-        if pat.is_timestamp(f.type) and cols[f.name].physical_type == "INT64"
-    }
+    stored = {f.name: cols[f.name] for f in arrow if pat.is_timestamp(f.type)}
+    int96 = {n for n, c in stored.items() if c.physical_type == "INT96"}
+    # INT64 timestamps: {name: {"timeUnit", "isAdjustedToUTC"}}
+    ts = {n: json.loads(c.logical_type.to_json()) for n, c in stored.items() if n not in int96}
     ns_cols = [c for c, t in ts.items() if t["timeUnit"] == "nanoseconds"]
-    if any(f.name not in ts and _left_to_inference(f.type) for f in arrow):
-        return None, ns_cols
-    # Spark's rule for a MILLIS/MICROS column not adjusted to UTC
-    infer_ntz = any(not t["isAdjustedToUTC"] for t in ts.values()) and spark.conf.get(
-        "spark.sql.parquet.inferTimestampNTZ.enabled", "true"
-    ) == "true"
+
+    def conf_on(key: str) -> bool:
+        return spark.conf.get(f"spark.sql.parquet.{key}", "true") == "true"
+
+    # each conf is read only when a column depends on it
+    infer_ntz = any(not t["isAdjustedToUTC"] for t in ts.values()) and conf_on(
+        "inferTimestampNTZ.enabled"
+    )
+    int96_type = T.TimestampType() if int96 and conf_on("int96AsTimestamp") else None
 
     def spark_type(f):
+        if f.name in int96:
+            return int96_type
         t = ts.get(f.name)
         if t is None:
-            return from_arrow_type(f.type)
+            try:
+                return None if _left_to_inference(f.type) else from_arrow_type(f.type)
+            except TypeError:  # no Arrow→Spark conversion
+                return None
         if t["timeUnit"] == "nanoseconds":
             return T.LongType()
         if infer_ntz and not t["isAdjustedToUTC"]:
             return T.TimestampNTZType()
         return T.TimestampType()
 
-    try:
-        return T.StructType([T.StructField(f.name, spark_type(f)) for f in arrow]), ns_cols
-    except TypeError:  # no Arrow→Spark conversion
-        return None, ns_cols
+    if ns_cols:
+        spark.conf.set(NANOS_AS_LONG, "true")
+    return {f.name: spark_type(f) for f in arrow}, ns_cols
 
 
 def _left_to_inference(t) -> bool:
     """Spark reads ``t`` other than its Arrow conversion says — a timestamp
-    (unit and UTC flag decide; mapped above only at top level), a duration
+    (its parquet types decide; mapped above only at top level), a duration
     (read as long), a time — or ``t`` nests such a type."""
     import pyarrow.types as pat
 
@@ -134,10 +151,12 @@ def _left_to_inference(t) -> bool:
 
 
 def _read_parquet(spark: SparkSession, path: str):
-    schema, ns_cols = _footer_schema(spark, path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.read if schema is None else spark.read.schema(schema)
+    from pyspark.sql import types as T
+
+    types, ns_cols = stored_types(spark, path)
+    reader = spark.read
+    if None not in types.values():
+        reader = reader.schema(T.StructType([T.StructField(n, t) for n, t in types.items()]))
     return reader.parquet(path), ns_cols
 
 
@@ -146,40 +165,36 @@ def read_parquet(spark: SparkSession, path: str):
     declared from the file's footer instead of inferred: inference runs a
     one-task Spark job per read, the declared schema none. The schema is
     the one Spark infers (TIMESTAMP(NANOS) columns as long, with
-    ``nanosAsLong`` set on the session as :func:`read_table` explains);
-    a footer type the mapping does not cover falls back to inference."""
+    :data:`NANOS_AS_LONG` set); a footer type the mapping does not cover
+    falls back to inference."""
     return _read_parquet(spark, path)[0]
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver table; timestamps are normalized to a single canonical
-    Spark TimestampType regardless of the parquet flavor:
-
-    - TIMESTAMP(NANOS) parquet (Spark can't read natively) is read as long and
-      converted (µs truncation — the same narrowing DuckDB applies, and the
-      same ns→µs divide the reference does at ref:src/nats_scan.cpp:749).
-    - ``timestamp[us]`` with isAdjustedToUTC=false reads as TIMESTAMP_NTZ in
-      Spark 4; with the session time zone pinned to UTC the cast to
-      TimestampType is value-identical, and downstream ``unix_micros``/
-      watermark/window code sees one type everywhere.
-
-    DELIBERATE session-wide effect: ``nanosAsLong`` stays set for the
-    session's lifetime once a ns-flavored table has been read. It cannot
-    be save/restored around this call — the conf is consulted at EXECUTION
-    time, and the returned DataFrame is lazy — so scoping it would make the
-    plan's behavior depend on when an action runs. Consequence for callers
-    mixing in their own reads: a plain ``spark.read.parquet`` of some other
-    ns-timestamp file on the same session returns raw int64 nanos (instead
-    of Spark 4's loud PARQUET_TYPE_ILLEGAL error); route such reads through
-    this helper, which converts them.
-    """
+def canonical_ts(name: str, stored):
+    """Stored timestamp column ``name`` of Spark type ``stored`` → canonical
+    TimestampType (schema.py BASE_FIELDS), the Spark readers' one ns → µs
+    narrowing: a long (TIMESTAMP(NANOS)) truncates toward zero, pre-1970
+    included, like the reference (ref:src/nats_scan.cpp:749) and DuckDB;
+    TIMESTAMP_NTZ is cast; any other type is returned as is."""
     from pyspark.sql import functions as F, types as T
 
-    df, ns_cols = _read_parquet(spark, table_path(sf_dir, name))
-    for c in ns_cols:
+    if isinstance(stored, T.LongType):
         # integer div — float division would lose precision above 2^53 ns
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    for field in df.schema.fields:
-        if isinstance(field.dataType, T.TimestampNTZType):
-            df = df.withColumn(field.name, F.col(field.name).cast("timestamp"))
+        return F.timestamp_micros(F.expr(f"`{name}` div 1000"))
+    if isinstance(stored, T.TimestampNTZType):
+        return F.col(name).cast("timestamp")
+    return F.col(name)
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str):
+    """Read one driver table with every timestamp column in the canonical
+    TimestampType whatever its parquet flavor (:func:`canonical_ts`), so
+    downstream ``unix_micros``/watermark/window code sees one type. Sets
+    :data:`NANOS_AS_LONG` for the session when the table stores ns."""
+    from pyspark.sql import types as T
+
+    df, ns_cols = _read_parquet(spark, table_path(sf_dir, name))
+    for f in df.schema.fields:
+        if f.name in ns_cols or isinstance(f.dataType, T.TimestampNTZType):
+            df = df.withColumn(f.name, canonical_ts(f.name, f.dataType))
     return df

@@ -32,6 +32,9 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
 - the ``sources/`` readers stay columnar: no ``to_pydict(``, ``to_pylist(``
   or ``.as_py(`` there (a per-message Python decode made the replay
   reader's memory grow with partition size).
+- a parquet footer's column types are read only in ``tables.py``: no
+  ``.logical_type``/``.physical_type`` elsewhere (a second footer parser
+  in the streaming scan mapped the stored ``ts`` by its own rules).
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -253,3 +256,14 @@ def test_sources_stay_columnar():
         if re.search(r"to_pydict\(|to_pylist\(|\.as_py\(", line)
     ]
     assert not bad, f"per-row Python conversion in a source reader: {bad}"
+
+
+def test_footer_types_parsed_only_in_tables():
+    bad = [
+        f"{_rel(p)}:{i}"
+        for p in _py_files()
+        if _rel(p) != "tables.py"
+        for i, line in _code_lines(p)
+        if re.search(r"\.(logical|physical)_type\b", line)
+    ]
+    assert not bad, f"parquet footer types parsed outside tables.py: {bad}"

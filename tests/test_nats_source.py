@@ -384,18 +384,20 @@ _EDGE_PAYLOADS = [
 ]
 
 
-def _write_log(path: str, event_ids, props, row_group_size=None) -> None:
+def _write_log(path: str, event_ids, props, row_group_size=None, ts=None, **write) -> None:
+    """A message log; ``ts`` defaults to ns stamps in January 2024, and
+    ``write`` passes parquet writer options (INT96, ...)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     n = len(event_ids)
+    if ts is None:
+        ts = pa.array([1_704_067_200 * 10**9 + i for i in range(n)], pa.timestamp("ns"))
     pq.write_table(
         pa.table(
             {
                 "event_id": pa.array(event_ids, pa.int64()),
-                "ts": pa.array(
-                    [1_704_067_200 * 10**9 + i for i in range(n)], pa.timestamp("ns")
-                ),
+                "ts": ts,
                 "user_id": pa.array([i % 3 for i in range(n)], pa.int64()),
                 "event_type": pa.array(["e"] * n),
                 "props": pa.array(props),
@@ -403,6 +405,7 @@ def _write_log(path: str, event_ids, props, row_group_size=None) -> None:
         ),
         path,
         row_group_size=row_group_size,
+        **write,
     )
 
 
@@ -421,6 +424,72 @@ def test_edge_payloads_extract_like_message_scan(spark, tmp_path):
     want = message_scan(spark, str(tmp_path), json_fields=fields).collect()
     assert len(got) == len(_EDGE_PAYLOADS)
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+#: the stored ``ts`` flavours of a log: ``(unit, tz, parquet writer options,
+#: epoch ns it holds)`` — a pre-1970 row with a sub-µs part, one on a whole
+#: µs, a post-1970 sub-µs one and one past 10^15 ns where the unit holds them
+_SUB_US = [-1_500, -1_000, 1_500, 10**15 + 1]
+_TS_FLAVOURS = {
+    "ns": ("ns", None, {}, _SUB_US),
+    "us_naive": ("us", None, {}, [-1_000, 10**15]),
+    "us_utc": ("us", "UTC", {}, [-1_000, 10**15]),
+    "int96": ("ns", None, {"use_deprecated_int96_timestamps": True}, _SUB_US),
+}
+#: epoch ns → µs, truncated toward zero
+_TRUNC_US = {-1_500: -1, -1_000: -1, 1_500: 1, 10**15: 10**12, 10**15 + 1: 10**12}
+
+
+def _write_flavour_log(path: str, flavour: str, row_group_size=None) -> list[int]:
+    """A log whose ``ts`` is stored in ``flavour``, one message per instant;
+    returns the instants' epoch µs, in seq order."""
+    import pyarrow as pa
+
+    unit, tz, write, ns = _TS_FLAVOURS[flavour]
+    scale = 1 if unit == "ns" else 1000
+    ts = pa.array([t // scale for t in ns], pa.timestamp(unit, tz=tz))
+    _write_log(path, list(range(len(ns))), ["{}"] * len(ns), row_group_size, ts, **write)
+    return [_TRUNC_US[t] for t in ns]
+
+
+def _unix_micros(df, ts: str, key: str) -> list[int]:
+    return [r[0] for r in df.orderBy(key).select(F.unix_micros(ts)).collect()]
+
+
+@pytest.mark.parametrize("flavour", sorted(_TS_FLAVOURS))
+def test_ts_flavours_narrow_alike_in_every_reader(spark, tmp_path, flavour):
+    """One ns → µs narrowing: every reader of the log — the table read, the
+    batch and streaming scans, and the replay source — truncates toward
+    zero, pre-1970 included, whatever flavour stores ``ts``."""
+    from duckdb_nats_jetstream_spark.streaming.stream_scan import (
+        message_stream,
+        run_to_completion,
+    )
+    from duckdb_nats_jetstream_spark.tables import read_table
+
+    want = _write_flavour_log(str(tmp_path / "events.parquet"), flavour)
+    table = read_table(spark, str(tmp_path), "events")
+    assert _unix_micros(table, "ts", "event_id") == want
+    stream = message_stream(spark, str(tmp_path))
+    for df in (
+        message_scan(spark, str(tmp_path)),
+        run_to_completion(stream, str(tmp_path / "ckpt")),
+        nats_scan(spark.read, "events", replay_path=_events(tmp_path)),
+    ):
+        assert _unix_micros(df, "ts_nats", "seq") == want
+
+
+def test_time_bound_on_pre_epoch_sub_micro_row_keeps_it(spark, tmp_path):
+    """A bound on the µs that a pre-1970 sub-µs message truncates to selects
+    it in both scans, and the replay source's row-group pruning (one row per
+    group) keeps its group."""
+    _write_flavour_log(str(tmp_path / "events.parquet"), "ns", row_group_size=1)
+    at = "1969-12-31T23:59:59.999999"  # -1 µs
+    bound = dict(start_time=at, end_time=at)
+    got = nats_scan(spark.read, "events", replay_path=_events(tmp_path), **bound)
+    want = message_scan(spark, str(tmp_path), **bound)
+    assert sorted(r.seq for r in got.collect()) == [1, 2]
+    assert sorted(r.seq for r in want.collect()) == [1, 2]
 
 
 def test_streaming_extraction_matches_batch(spark, tmp_path):

@@ -21,6 +21,10 @@ BATCH_QUERIES = [
 ]
 
 
+#: queries off the benchmark whose build once materialized and no longer does
+LAZY_QUERIES = ["text_countmin_topk"]
+
+
 def _jobs(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
 
@@ -32,7 +36,7 @@ def registry():
     return full_registry()
 
 
-@pytest.mark.parametrize("name", BATCH_QUERIES)
+@pytest.mark.parametrize("name", BATCH_QUERIES + LAZY_QUERIES)
 def test_batch_query_builds_without_a_job(spark, sf_dir, registry, name):
     before = _jobs(spark)
     registry[name][0](spark, sf_dir)
@@ -40,8 +44,7 @@ def test_batch_query_builds_without_a_job(spark, sf_dir, registry, name):
 
 
 def _logs(d: str) -> list[str]:
-    """Message logs in both timestamp flavours the readers accept, plus an
-    INT96 one the footer mapping leaves to Spark's inference."""
+    """Message logs in three timestamp flavours: ns, µs and INT96."""
     n = 4
     ts = [1_704_067_200_000_000 + i for i in range(n)]
     cols = {
@@ -74,10 +77,7 @@ def test_declared_schema_equals_inferred(spark, sf_dir, tmp_path):
 
 
 def test_declared_schema_read_runs_no_job(spark, sf_dir, tmp_path):
-    ns, us, int96 = _logs(str(tmp_path))
     before = _jobs(spark)
-    for p in [ns, us, *glob.glob(os.path.join(sf_dir, "*.parquet"))]:
+    for p in [*_logs(str(tmp_path)), *glob.glob(os.path.join(sf_dir, "*.parquet"))]:
         read_parquet(spark, p).schema
     assert _jobs(spark) == before
-    read_parquet(spark, int96).schema  # inferred
-    assert _jobs(spark) == before + 1
