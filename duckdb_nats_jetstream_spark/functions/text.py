@@ -105,26 +105,6 @@ def _seeded_md5(seed: int):
     return lambda s: F.md5(F.concat(F.lit(f"{seed}:"), s))
 
 
-def minhash_signature(sh: Column, k: int = 8) -> list[Column]:
-    """k min-hash values. Instead of k md5 calls per shingle, compute
-    ceil(k/4) salted digests and carve four 8-hex-char (32-bit) slices from
-    each — 4× less hashing, and the lexicographic min of uniform fixed-width
-    hex slices is still a valid min-hash. NULL on empty shingle sets (docs
-    shorter than the gram)."""
-    out: list[Column] = []
-    for d in range((k + 3) // 4):
-        digest = F.transform(sh, _seeded_md5(d))
-        for j in range(4):
-            if len(out) == k:
-                break
-            out.append(
-                F.array_min(
-                    F.transform(digest, _hex_slice(j * 8 + 1))
-                )
-            )
-    return out
-
-
 def _hex_slice(start: int):
     return lambda h: F.substring(h, start, 8)
 
@@ -300,24 +280,3 @@ def char_diversity(c: Column) -> Column:
         counts, F.lit(0.0), lambda acc, c: acc + (c / n) * (c / n)
     )
     return F.when(n > 0, F.lit(1.0) - sumsq).otherwise(F.lit(0.0))
-
-
-def sql_char_diversity(x: str) -> str:
-    chars = (
-        f"list_transform(range(1, length({x}) + 1), "
-        f"i -> substring({x}, CAST(i AS INT), 1))"
-    )
-    n = f"len({chars})"
-    counts = (
-        f"list_transform(list_sort(list_distinct({chars})), "
-        f"ch -> len(list_filter({chars}, y -> y = ch)))"
-    )
-    p = f"(CAST(c AS DOUBLE) / {n})"
-    sumsq = (
-        f"list_reduce(list_prepend(CAST(0 AS DOUBLE), "
-        f"list_transform({counts}, c -> {p} * {p})), (acc, v) -> acc + v)"
-    )
-    return (
-        f"CASE WHEN length({x}) > 0 THEN CAST(1.0 AS DOUBLE) - {sumsq} "
-        f"ELSE CAST(0.0 AS DOUBLE) END"
-    )

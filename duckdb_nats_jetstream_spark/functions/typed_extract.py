@@ -11,15 +11,10 @@ Spark mapping: a decoded payload is a *struct column*. Dot-path navigation,
 typed results, and NULL-on-unset-parent are native struct semantics, so
 ``typed_extract`` is pure column projection — no UDF, fully codegen'd.
 
-Two decode front-ends produce the struct:
-
-- ``parse_json_payload``: ``from_json(payload, schema)`` for JSON payloads
-  with a declared (bind-time) schema — unparseable text → NULL struct →
-  all-NULL extracted columns, matching ref:src/nats_scan.cpp:852-858.
-- ``from_protobuf_payload``: real protobuf via
-  ``pyspark.sql.protobuf.functions.from_protobuf`` with a compiled descriptor
-  set. Gated behind the optional spark-protobuf jar; raises a clear error if
-  absent (the jar isn't bundled in this environment).
+The decode front-end ``parse_json_payload`` produces the struct:
+``from_json(payload, schema)`` for JSON payloads with a declared (bind-time)
+schema — unparseable text → NULL struct → all-NULL extracted columns,
+matching ref:src/nats_scan.cpp:852-858.
 
 Path validation errors mirror the reference's bind errors
 (ref:src/nats_scan.cpp:330-362): unknown field, or navigating *through* a
@@ -88,28 +83,4 @@ def parse_json_payload(
     struct (PERMISSIVE from_json), so every downstream extraction is NULL."""
     return df.withColumn(
         struct_col, F.from_json(F.col(payload_col).cast("string"), schema)
-    )
-
-
-def from_protobuf_payload(
-    df: DataFrame,
-    message_name: str,
-    desc_file_path: str,
-    payload_col: str = "payload",
-    struct_col: str = "decoded",
-) -> DataFrame:
-    """True protobuf decode via spark-protobuf (needs the
-    ``spark-protobuf`` jar and a ``protoc --descriptor_set_out`` file in
-    place of the reference's runtime .proto parsing,
-    ref:src/nats_scan.cpp:293-328)."""
-    try:
-        from pyspark.sql.protobuf.functions import from_protobuf
-    except ImportError as e:  # pragma: no cover
-        raise BindError(
-            "protobuf extraction requires the spark-protobuf package "
-            "(org.apache.spark:spark-protobuf); not available in this build"
-        ) from e
-    return df.withColumn(
-        struct_col,
-        from_protobuf(F.col(payload_col), message_name, descFilePath=desc_file_path),
     )

@@ -45,7 +45,3 @@ def sql_norm(a: str) -> str:
 
 def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
     return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def sql_cosine(a: str, b: str) -> str:
-    return f"{sql_dot(a, b)} / ({sql_norm(a)} * {sql_norm(b)})"

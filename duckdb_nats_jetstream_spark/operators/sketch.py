@@ -36,23 +36,33 @@ def _cell(token_col: F.Column, d: int, width_hex: int) -> F.Column:
     )
 
 
-def _sketch_of(toks: DataFrame, depth: int, width_hex: int) -> DataFrame:
+def _cells(depth: int, width_hex: int) -> F.Column:
+    """Token ``t``'s ``depth`` probed cells, one ``s = (d, cell)`` row each."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(d).alias("d"),
+                    _cell(F.col("t"), d, width_hex).alias("cell"),
+                )
+                for d in range(depth)
+            ]
+        )
+    ).alias("s")
+
+
+def _sketch_of(
+    toks: DataFrame, depth: int, width_hex: int, n: str | None = None
+) -> DataFrame:
     """(d, cell, n) cell table from a token relation — one agg over the
-    fixed (depth · 16^width_hex) key space."""
-    cells = toks.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cell(F.col("t"), d, width_hex).alias("cell"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("s")
-    ).select(F.col("s.d").alias("d"), F.col("s.cell").alias("cell"))
-    return cells.groupBy("d", "cell").agg(F.count("*").alias("n"))
+    fixed (depth · 16^width_hex) key space. A row of ``toks`` counts once,
+    or as many times as its column ``n`` says."""
+    keep = [n] if n else []
+    cells = toks.select(_cells(depth, width_hex), *keep).select(
+        F.col("s.d").alias("d"), F.col("s.cell").alias("cell"), *keep
+    )
+    total = F.sum(n) if n else F.count("*")
+    return cells.groupBy("d", "cell").agg(total.alias("n"))
 
 
 def countmin_sketch(
@@ -84,39 +94,25 @@ def countmin_estimates(
     ``(token, true_n, est_n)`` — ``est_n ≥ true_n`` always (tested), with
     equality unless the token's cells collided.
 
-    Two aggregations over the exploded tokens: the sketch build (fixed
-    key space: depth · 16^width_hex cells) and, for the report only, the
-    exact counts of the top-k (the part a 100 TB run would *skip* — the
-    sketch exists precisely so the exact per-token shuffle isn't needed;
-    it's here to make the sketch's accuracy auditable by the oracle gate).
+    The exploded tokens are aggregated once, into exact ``(t, true_n)``
+    counts; the sketch sums ``true_n`` per cell (the same integers as
+    counting tokens), and the report takes the top-k from the same
+    aggregate, so the corpus is read and tokenized once and the two
+    consumers share one exchange. A 100 TB run would keep only the sketch
+    — it exists so the exact per-token shuffle isn't needed; the exact
+    counts are here to make its accuracy auditable by the oracle gate.
     """
-    toks = (
+    counts = (
         df.select(F.explode(tokens(F.col(text_col))).alias("t"))
         .filter(F.col("t") != "")
-    )
-    sketch = _sketch_of(toks, depth, width_hex)
-
-    exact = (
-        toks.groupBy("t")
+        .groupBy("t")
         .agg(F.count("*").alias("true_n"))
-        .orderBy(F.col("true_n").desc(), F.col("t"))
-        .limit(top_k)
     )
-    probes = exact.select(
-        "t",
-        "true_n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(d).alias("d"),
-                        _cell(F.col("t"), d, width_hex).alias("cell"),
-                    )
-                    for d in range(depth)
-                ]
-            )
-        ).alias("s"),
-    ).select("t", "true_n", F.col("s.d").alias("d"), F.col("s.cell").alias("cell"))
+    sketch = _sketch_of(counts, depth, width_hex, "true_n")
+    exact = counts.orderBy(F.col("true_n").desc(), F.col("t")).limit(top_k)
+    probes = exact.select("t", "true_n", _cells(depth, width_hex)).select(
+        "t", "true_n", F.col("s.d").alias("d"), F.col("s.cell").alias("cell")
+    )
     return (
         probes.join(F.broadcast(sketch), ["d", "cell"])
         .groupBy(F.col("t").alias("token"), "true_n")

@@ -184,20 +184,14 @@ def scan_gap_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def scan_windowed_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling-window rollup (epoch-aligned, like streaming's window()) —
-    the batch twin of streaming.windowed_message_counts, oracle-checked."""
-    df = message_scan(spark, sf_dir)
-    return (
-        df.groupBy(F.window("ts_nats", "6 hours").alias("win"), F.col("subject"))
-        .agg(F.count("*").alias("n_msgs"), F.max("seq").alias("max_seq"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "subject",
-            "n_msgs",
-            "max_seq",
-        )
+    """Tumbling-window rollup (epoch-aligned) — the streaming operator
+    ``windowed_message_counts`` itself over the batch scan, oracle-checked;
+    on a batch frame its watermark is a no-op."""
+    from duckdb_nats_jetstream_spark.streaming.stream_scan import (
+        windowed_message_counts,
     )
+
+    return windowed_message_counts(message_scan(spark, sf_dir), window="6 hours")
 
 
 def nats_source_scan(spark: SparkSession, sf_dir: str) -> DataFrame:

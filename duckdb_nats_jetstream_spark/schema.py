@@ -2,9 +2,11 @@
 
 Base message schema (ref:src/nats_scan.cpp:365-385; docs/GUIDE.md:112):
 ``stream, subject, seq, ts_nats, payload`` — fixed, never inferred from
-data. It is the ``nats_jetstream`` source's schema. Payload extraction
-composes above it (``nats_scan``, ``message_scan``), and turns payload to
-string in JSON mode (ref:src/nats_scan.cpp:379-385).
+data. It is the ``nats_jetstream`` source's schema, and every scan's:
+``message_scan``, ``message_stream`` and ``nats_scan`` apply the
+reference's scan parameters above it in one function
+(``sources.message_scan.apply_scan_parameters``), which turns payload to
+string in JSON mode only (ref:src/nats_scan.cpp:379-385).
 
 Protobuf/typed-field → Spark type map (ref:src/nats_scan.cpp:130-166):
 Spark has no unsigned integers, so uint32→long (lossless) and uint64→long

@@ -78,6 +78,71 @@ def message_projection(stream: str, ts_nats):
     ]
 
 
+def _names(v) -> list[str]:
+    """A list parameter; a bare string is one name."""
+    return [v] if isinstance(v, str) else list(v or [])
+
+
+def _payload_as(df: DataFrame, dtype: T.DataType) -> DataFrame:
+    if df.schema["payload"].dataType == dtype:
+        return df
+    return df.withColumn("payload", F.col("payload").cast(dtype))
+
+
+def apply_scan_parameters(
+    read,
+    *,
+    subject: str | None = None,
+    subject_pattern: str | None = None,
+    json_fields=None,
+    proto_file: str | None = None,
+    proto_message: str | None = None,
+    proto_paths=None,
+    payload_binary: bool | None = None,
+) -> DataFrame:
+    """The reference's post-scan parameters over the five base columns that
+    ``read()`` returns — one definition for ``message_scan``,
+    ``message_stream`` and ``nats_scan``, so every scan gives one schema and
+    one result for one log. The parameters bind before ``read()`` runs
+    (ref:src/nats_scan.cpp:267-285), JSON with proto before the ``.proto``
+    file is read; then ``subject`` substring (ref:src/nats_scan.cpp:741-746),
+    NATS wildcard ``subject_pattern``, JSON or proto extraction (a bare
+    string is one name), and the payload mode: string in JSON mode, binary
+    otherwise (ref:src/nats_scan.cpp:379-385), unless ``payload_binary``
+    says which."""
+    fields, paths = _names(json_fields), _names(proto_paths)
+    require(
+        not (fields and paths),
+        "Cannot use both json_extract and proto_extract parameters",
+    )
+    regex = None if subject_pattern is None else nats_wildcard_regex(subject_pattern)
+    if paths:
+        require(
+            bool(proto_file),
+            "proto_file parameter is required when using proto_extract",
+        )
+        require(
+            bool(proto_message),
+            "proto_message parameter is required when using proto_extract",
+        )
+        with open(proto_file, encoding="utf-8") as fh:
+            proto_text = fh.read()
+    df = read()
+    if subject is not None:
+        df = df.filter(F.col("subject").contains(subject))
+    if regex is not None:
+        df = df.filter(F.col("subject").rlike(regex))
+    if fields:
+        # get_json_object takes no BINARY
+        df = json_extract(_payload_as(df, T.StringType()), fields)
+    elif paths:
+        from duckdb_nats_jetstream_spark.functions.proto import proto_extract
+
+        df = proto_extract(df, proto_text, proto_message, paths)
+    binary = not fields if payload_binary is None else payload_binary
+    return _payload_as(df, T.BinaryType() if binary else T.StringType())
+
+
 def _as_timestamp(v) -> _dt.datetime:
     if isinstance(v, str):
         return _dt.datetime.fromisoformat(v)
@@ -182,93 +247,84 @@ def message_scan(
     the clean predicate ``ts_nats <= end_time``.
     """
     require(bool(stream), "nats_scan requires a stream name")
-    if subject_pattern is not None:
-        nats_wildcard_regex(subject_pattern)  # bind-time validation
-    has_seq = start_seq is not None or end_seq is not None
-    has_time = start_time is not None or end_time is not None
-    require(
-        not (has_seq and has_time),
-        "Cannot specify both sequence range (start_seq/end_seq) and "
-        "time range (start_time/end_time)",
+
+    def read() -> DataFrame:
+        has_seq = start_seq is not None or end_seq is not None
+        has_time = start_time is not None or end_time is not None
+        require(
+            not (has_seq and has_time),
+            "Cannot specify both sequence range (start_seq/end_seq) and "
+            "time range (start_time/end_time)",
+        )
+        # Read the raw log and apply range predicates on the *stored* columns so
+        # they reach the parquet scan as PushedFilters (row-group min/max pruning
+        # — the distributed analogue of the reference's cursor bounds + broker
+        # binary search). Filtering on derived columns (seq = event_id+1, the
+        # ns→µs timestamp conversion) would defeat pushdown, which at 100 TB is
+        # the difference between scanning one row group and scanning the table.
+        ev = read_parquet(spark, table_path(sf_dir, "events"))
+        ts_type = ev.schema["ts"].dataType
+        ts_raw_ns = isinstance(ts_type, T.LongType)
+        ts_ntz = isinstance(ts_type, T.TimestampNTZType)
+
+        def _ts_literal(t: _dt.datetime):
+            # Literal typed to match the *stored* column so the comparison stays a
+            # plain pushable predicate: an implicit NTZ↔LTZ coercion would route
+            # through the session time zone and (a) silently depend on it, (b) can
+            # defeat parquet filter pushdown. The LTZ literal is built from a naive
+            # datetime interpreted in the session zone, so casting it back to NTZ
+            # round-trips to the original wall-clock value in ANY session zone.
+            lit = F.lit(t)
+            return lit.cast("timestamp_ntz") if ts_ntz else lit
+
+        if start_seq is not None:
+            ev = ev.filter(F.col("event_id") >= F.lit(int(start_seq) - 1))
+        if end_seq is not None:
+            ev = ev.filter(F.col("event_id") <= F.lit(int(end_seq) - 1))
+        # Time bounds at µs granularity (ts_nats is µs-truncated toward zero, the
+        # same ns→µs narrowing the reference does at ref:src/nats_scan.cpp:749):
+        # µs-trunc(x) >= t0  ⟺  x_ns >= _first_ns(t0µs);
+        # µs-trunc(x) <= t1  ⟺  x_ns <  _first_ns(t1µs+1).
+        if start_time is not None:
+            t0 = _as_timestamp(start_time)
+            bound = F.lit(_first_ns(_micros(t0))) if ts_raw_ns else _ts_literal(t0)
+            ev = ev.filter(F.col("ts") >= bound)
+        if end_time is not None:
+            t1 = _as_timestamp(end_time)
+            if end_time_compat:
+                # Reference wart: resolve end_time to the FIRST message with
+                # ts >= end_time over the whole stream; that sequence is an
+                # INCLUSIVE end bound (ref:src/nats_scan.cpp:684-698 — the
+                # binary search finds at-or-after, and the cursor runs through
+                # it). One extra tiny aggregate over the pushed-down ts filter,
+                # broadcast as a 1-row bound — the distributed stand-in for the
+                # reference's driver-side resolution.
+                raw = read_parquet(spark, table_path(sf_dir, "events"))
+                at_or_after = (
+                    F.col("ts") >= F.lit(_first_ns(_micros(t1)))
+                    if ts_raw_ns
+                    else F.col("ts") >= _ts_literal(t1)
+                )
+                bound = raw.filter(at_or_after).agg(F.min("event_id").alias("__b"))
+                ev = (
+                    ev.crossJoin(F.broadcast(bound))
+                    .filter(F.col("__b").isNull() | (F.col("event_id") <= F.col("__b")))
+                    .drop("__b")
+                )
+            elif ts_raw_ns:
+                ev = ev.filter(F.col("ts") < F.lit(_first_ns(_micros(t1) + 1)))
+            else:
+                ev = ev.filter(F.col("ts") <= _ts_literal(t1))
+        # Canonicalize ts to TimestampType AFTER the pushdown filters above,
+        # so the range predicates reach the parquet scan on the stored column
+        # while every consumer sees one timestamp flavor (schema.py
+        # BASE_FIELDS).
+        return ev.select(*message_projection(stream, canonical_ts("ts", ts_type)))
+
+    return apply_scan_parameters(
+        read,
+        subject=subject,
+        subject_pattern=subject_pattern,
+        json_fields=json_fields,
+        payload_binary=payload_binary,
     )
-    # Payload mode: string only when JSON extraction is active
-    # (ref:src/nats_scan.cpp:379-385).
-    if payload_binary is None:
-        payload_binary = not json_fields
-
-    # Read the raw log and apply range predicates on the *stored* columns so
-    # they reach the parquet scan as PushedFilters (row-group min/max pruning
-    # — the distributed analogue of the reference's cursor bounds + broker
-    # binary search). Filtering on derived columns (seq = event_id+1, the
-    # ns→µs timestamp conversion) would defeat pushdown, which at 100 TB is
-    # the difference between scanning one row group and scanning the table.
-    ev = read_parquet(spark, table_path(sf_dir, "events"))
-    ts_type = ev.schema["ts"].dataType
-    ts_raw_ns = isinstance(ts_type, T.LongType)
-    ts_ntz = isinstance(ts_type, T.TimestampNTZType)
-
-    def _ts_literal(t: _dt.datetime):
-        # Literal typed to match the *stored* column so the comparison stays a
-        # plain pushable predicate: an implicit NTZ↔LTZ coercion would route
-        # through the session time zone and (a) silently depend on it, (b) can
-        # defeat parquet filter pushdown. The LTZ literal is built from a naive
-        # datetime interpreted in the session zone, so casting it back to NTZ
-        # round-trips to the original wall-clock value in ANY session zone.
-        lit = F.lit(t)
-        return lit.cast("timestamp_ntz") if ts_ntz else lit
-
-    if start_seq is not None:
-        ev = ev.filter(F.col("event_id") >= F.lit(int(start_seq) - 1))
-    if end_seq is not None:
-        ev = ev.filter(F.col("event_id") <= F.lit(int(end_seq) - 1))
-    # Time bounds at µs granularity (ts_nats is µs-truncated toward zero, the
-    # same ns→µs narrowing the reference does at ref:src/nats_scan.cpp:749):
-    # µs-trunc(x) >= t0  ⟺  x_ns >= _first_ns(t0µs);
-    # µs-trunc(x) <= t1  ⟺  x_ns <  _first_ns(t1µs+1).
-    if start_time is not None:
-        t0 = _as_timestamp(start_time)
-        bound = F.lit(_first_ns(_micros(t0))) if ts_raw_ns else _ts_literal(t0)
-        ev = ev.filter(F.col("ts") >= bound)
-    if end_time is not None:
-        t1 = _as_timestamp(end_time)
-        if end_time_compat:
-            # Reference wart: resolve end_time to the FIRST message with
-            # ts >= end_time over the whole stream; that sequence is an
-            # INCLUSIVE end bound (ref:src/nats_scan.cpp:684-698 — the
-            # binary search finds at-or-after, and the cursor runs through
-            # it). One extra tiny aggregate over the pushed-down ts filter,
-            # broadcast as a 1-row bound — the distributed stand-in for the
-            # reference's driver-side resolution.
-            raw = read_parquet(spark, table_path(sf_dir, "events"))
-            at_or_after = (
-                F.col("ts") >= F.lit(_first_ns(_micros(t1)))
-                if ts_raw_ns
-                else F.col("ts") >= _ts_literal(t1)
-            )
-            bound = raw.filter(at_or_after).agg(F.min("event_id").alias("__b"))
-            ev = (
-                ev.crossJoin(F.broadcast(bound))
-                .filter(F.col("__b").isNull() | (F.col("event_id") <= F.col("__b")))
-                .drop("__b")
-            )
-        elif ts_raw_ns:
-            ev = ev.filter(F.col("ts") < F.lit(_first_ns(_micros(t1) + 1)))
-        else:
-            ev = ev.filter(F.col("ts") <= _ts_literal(t1))
-
-    # Canonicalize ts to TimestampType AFTER the pushdown filters above, so
-    # the range predicates reach the parquet scan on the stored column while
-    # every consumer sees one timestamp flavor (schema.py BASE_FIELDS).
-    df = ev.select(*message_projection(stream, canonical_ts("ts", ts_type)))
-    if subject is not None:
-        # substring containment, evaluated post-scan exactly like the
-        # reference's post-fetch filter (ref:src/nats_scan.cpp:741-746).
-        df = df.filter(F.col("subject").contains(subject))
-    if subject_pattern is not None:
-        df = df.filter(F.col("subject").rlike(nats_wildcard_regex(subject_pattern)))
-
-    if json_fields:
-        df = json_extract(df, json_fields, payload_col="payload")
-    if payload_binary:
-        df = df.withColumn("payload", F.col("payload").cast("binary"))
-    return df

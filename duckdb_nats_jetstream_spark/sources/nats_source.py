@@ -4,9 +4,10 @@ the semantics of the reference's ``nats_scan`` table function
 
 - **Fixed schema**, never inferred: the 5 base columns
   (ref:src/nats_scan.cpp:365-385). Payload extraction composes above the
-  source: :func:`nats_scan` applies the same ``json_extract``/
-  ``proto_extract`` transforms as ``message_scan``, so both scans give the
-  same values for the same log.
+  source: :func:`nats_scan` applies the reference's scan parameters through
+  ``message_scan.apply_scan_parameters``, as ``message_scan`` and
+  ``message_stream`` do, so every scan gives the same schema and values
+  for the same log.
 - **Partitioned parallel scan** — the reference is hard single-threaded
   (``MaxThreads()==1``, ref:src/nats_scan.cpp:197-199) and lists parallel
   scanning as roadmap (ref:docs/GUIDE.md:484-488). Here ``partitions()``
@@ -52,17 +53,15 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from duckdb_nats_jetstream_spark.errors import BindError, require
-from duckdb_nats_jetstream_spark.functions.json_extract import (
-    json_extract as _json_extract,
-)
-from duckdb_nats_jetstream_spark.functions.proto import (
-    proto_extract as _proto_extract,
-)
+from duckdb_nats_jetstream_spark.errors import BindError
 from duckdb_nats_jetstream_spark.schema import message_schema
-from duckdb_nats_jetstream_spark.sources.message_scan import _as_timestamp, _micros
+from duckdb_nats_jetstream_spark.sources.message_scan import (
+    _as_timestamp,
+    _micros,
+    apply_scan_parameters,
+)
 
 #: rows per Arrow batch on both sides of ``fetch`` — the reference's
 #: ``STANDARD_VECTOR_SIZE`` chunk (PAPER.md)
@@ -715,11 +714,6 @@ def register(spark) -> None:
             j_session.clearActiveSession()
 
 
-def _names(v) -> list[str]:
-    """A list parameter; a bare string is one name."""
-    return [v] if isinstance(v, str) else list(v or [])
-
-
 def nats_scan(
     reader,
     stream: str,
@@ -737,38 +731,21 @@ def nats_scan(
     (a checkpointable tail); ``options`` are the source's own
     (``replay_path``, ``start_seq``, ``subject``, ``partitions``, ...).
     The source yields the 5 base columns; the reference's extraction
-    parameters compose above it through the same transforms
-    ``message_scan`` uses, so the JVM ``get_json_object`` is the one JSON
-    extractor. Call :func:`register` on the session first.
+    parameters compose above it through ``message_scan``'s
+    :func:`apply_scan_parameters`, the one definition all three scans
+    share, so the JVM ``get_json_object`` is the one JSON extractor and the
+    payload is binary outside JSON mode. Call :func:`register` on the
+    session first.
 
     Bind rules (ref:src/nats_scan.cpp:267-285): JSON and proto together is
     an error; ``proto_extract`` needs ``proto_file`` and ``proto_message``;
-    the ``.proto`` file is read here, driver-side, so workers never see
+    the ``.proto`` file is read at the call, driver-side, so workers never see
     its path."""
-    json_fields = _names(json_extract)
-    proto_paths = _names(proto_extract)
-    require(
-        not (json_fields and proto_paths),
-        "Cannot use both json_extract and proto_extract parameters",
+    load = reader.format("nats_jetstream").options(stream=stream, **options).load
+    return apply_scan_parameters(
+        load,
+        json_fields=json_extract,
+        proto_file=proto_file,
+        proto_message=proto_message,
+        proto_paths=proto_extract,
     )
-    proto_text = None
-    if proto_paths:
-        require(
-            bool(proto_file),
-            "proto_file parameter is required when using proto_extract",
-        )
-        require(
-            bool(proto_message),
-            "proto_message parameter is required when using proto_extract",
-        )
-        with open(proto_file, encoding="utf-8") as fh:
-            proto_text = fh.read()
-    df = reader.format("nats_jetstream").options(stream=stream, **options).load()
-    if json_fields:
-        # payload is string in JSON mode (ref:src/nats_scan.cpp:379-391),
-        # and get_json_object takes no BINARY
-        df = df.withColumn("payload", F.col("payload").cast("string"))
-        return _json_extract(df, json_fields)
-    if proto_paths:
-        return _proto_extract(df, proto_text, proto_message, proto_paths)
-    return df

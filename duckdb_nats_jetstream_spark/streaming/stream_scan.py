@@ -10,10 +10,13 @@ Spark gives them natively:
   ``ts_nats``;
 - partitioned file/DataSource streams = the parallel scan.
 
-The stream carries the same 5-column message schema as the batch scan, so
-every extraction/filter operator composes unchanged on either; ``ts`` is
-typed and narrowed by the batch reads' own ``tables`` helpers, so ns
-timestamps truncate toward zero to µs, as in every reader, pre-1970 included.
+The stream carries the same 5-column message schema as the batch scan and
+the ``nats_jetstream`` source, binary payload outside JSON mode included:
+all three apply the reference's scan parameters through one function,
+``message_scan.apply_scan_parameters``, so every extraction/filter
+operator composes unchanged on any of them. ``ts`` is typed and narrowed
+by the batch reads' own ``tables`` helpers, so ns timestamps truncate
+toward zero to µs, as in every reader, pre-1970 included.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from duckdb_nats_jetstream_spark.functions.json_extract import json_extract
 from duckdb_nats_jetstream_spark.session import scoped_conf
 from duckdb_nats_jetstream_spark.sinks import _prunable_timestamps
 from duckdb_nats_jetstream_spark.tables import NANOS_AS_LONG, canonical_ts, stored_types
@@ -82,18 +84,18 @@ def message_stream(
         # tests use to force multi-batch state round-trips
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     raw = reader.load(log_dir)
-    # the shared events→message mapping — ONE definition with the batch
-    # scan and the oracle CTE (see message_scan.message_projection)
+    # one definition with the batch scan and the DataSource: the
+    # events→message mapping and the reference's post-scan parameters
     from duckdb_nats_jetstream_spark.sources.message_scan import (
+        apply_scan_parameters,
         message_projection,
     )
 
-    df = raw.select(*message_projection(stream, canonical_ts("ts", ts_type)))
-    if subject is not None:
-        df = df.filter(F.col("subject").contains(subject))
-    if json_fields:
-        df = json_extract(df, json_fields, payload_col="payload")
-    return df
+    return apply_scan_parameters(
+        lambda: raw.select(*message_projection(stream, canonical_ts("ts", ts_type))),
+        subject=subject,
+        json_fields=json_fields,
+    )
 
 
 def windowed_message_counts(

@@ -34,7 +34,12 @@ Checks here are SYNTACTIC and zero-false-positive by construction:
   reader's memory grow with partition size).
 - a parquet footer's column types are read only in ``tables.py``: no
   ``.logical_type``/``.physical_type`` elsewhere (a second footer parser
-  in the streaming scan mapped the stored ``ts`` by its own rules).
+  in the streaming scan mapped the stored ``ts`` by its own rules);
+- under ``sources/`` and ``streaming/`` only ``sources/message_scan.py``
+  calls ``json_extract(`` or ``proto_extract(``: the reference's scan
+  parameters apply in its ``apply_scan_parameters`` alone (three copies
+  had drifted: the stream's payload was a string, and a bare-string field
+  list split into characters in two of them).
 
 Still sweep territory (semantic, not lintable without false positives):
 unguarded ``/`` where the denominator can be 0 on real data, and
@@ -267,3 +272,15 @@ def test_footer_types_parsed_only_in_tables():
         if re.search(r"\.(logical|physical)_type\b", line)
     ]
     assert not bad, f"parquet footer types parsed outside tables.py: {bad}"
+
+
+def test_scan_parameters_applied_in_one_place():
+    bad = [
+        f"{_rel(p)}:{i}"
+        for p in _py_files()
+        if _rel(p).split(os.sep)[0] in ("sources", "streaming")
+        and _rel(p) != os.path.join("sources", "message_scan.py")
+        for i, line in _code_lines(p)
+        if re.search(r"(json|proto)_extract\(", line)
+    ]
+    assert not bad, f"scan parameters applied outside message_scan.py: {bad}"

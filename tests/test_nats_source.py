@@ -479,6 +479,82 @@ def test_ts_flavours_narrow_alike_in_every_reader(spark, tmp_path, flavour):
         assert _unix_micros(df, "ts_nats", "seq") == want
 
 
+#: the reference's post-scan parameters, as ``(subject, field list)``; the
+#: bare string has more than one character, so splitting it would show
+_SCAN_PARAMETERS = {
+    "none": (None, None),
+    "subject": ("purchase", None),
+    "json_list": (None, ["k"]),
+    "json_bare_string": (None, "user"),
+}
+
+
+@pytest.mark.parametrize("case", list(_SCAN_PARAMETERS))
+def test_every_scan_gives_one_schema_and_result(spark, sf_dir, tmp_path, case):
+    """The batch scan, the stream and the source, read or tailed, apply the
+    same parameters alike: one schema (binary payload outside JSON mode, a
+    bare string field list is one name) and one set of rows."""
+    import os
+
+    from duckdb_nats_jetstream_spark.streaming.stream_scan import (
+        message_stream,
+        run_to_completion,
+    )
+
+    subject, fields = _SCAN_PARAMETERS[case]
+    os.symlink(_events(sf_dir), tmp_path / "events.parquet")
+    source = dict(replay_path=_events(tmp_path), json_extract=fields)
+    if subject is not None:
+        source["subject"] = subject
+    batch = dict(subject=subject, json_fields=fields)
+    scans = {
+        "message_scan": message_scan(spark, str(tmp_path), **batch),
+        "message_stream": run_to_completion(
+            message_stream(spark, str(tmp_path), **batch),
+            str(tmp_path / "ckpt_stream"),
+        ),
+        "nats_scan(read)": nats_scan(spark.read, "events", **source),
+        "nats_scan(readStream)": run_to_completion(
+            nats_scan(spark.readStream, "events", **source), str(tmp_path / "ckpt_tail")
+        ),
+    }
+    want = scans.pop("message_scan")
+    want_rows = sorted(map(tuple, want.collect()), key=lambda r: r[2])
+    assert want_rows
+    for name, df in scans.items():
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in want.schema
+        ], name
+        assert sorted(map(tuple, df.collect()), key=lambda r: r[2]) == want_rows, name
+
+
+def test_registry_import_loads_no_scan_front_end():
+    """Building the query registry imports neither the proto codec, the
+    streaming scan nor the DataSource: the queries that use them import
+    them when they run."""
+    import os
+    import subprocess
+    import sys
+
+    lazy = [
+        "duckdb_nats_jetstream_spark.functions.proto",
+        "duckdb_nats_jetstream_spark.streaming.stream_scan",
+        "duckdb_nats_jetstream_spark.sources.nats_source",
+    ]
+    code = (
+        "import sys\n"
+        "from duckdb_nats_jetstream_spark.queries import full_registry\n"
+        "full_registry()\n"
+        f"print([m for m in {lazy!r} if m in sys.modules])\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True, text=True, timeout=120
+    )
+    assert out.returncode == 0, out.stderr
+    assert out.stdout.strip() == "[]"
+
+
 def test_time_bound_on_pre_epoch_sub_micro_row_keeps_it(spark, tmp_path):
     """A bound on the µs that a pre-1970 sub-µs message truncates to selects
     it in both scans, and the replay source's row-group pruning (one row per

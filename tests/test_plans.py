@@ -359,9 +359,14 @@ def test_countmin_probe_is_broadcast_and_sketch_not_cartesian(spark, sf_dir):
     from duckdb_nats_jetstream_spark.plans.explain import physical_plan
     from duckdb_nats_jetstream_spark.queries.pipeline4 import text_countmin_topk
 
-    plan = physical_plan(text_countmin_topk(spark, sf_dir))
+    df = text_countmin_topk(spark, sf_dir)
+    plan = physical_plan(df)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan, plan
+    # one token aggregate feeds the sketch and the top-k: the corpus is
+    # read once, and the executed plan reuses its exchange
+    df.collect()
+    assert "ReusedExchange" in physical_plan(df), physical_plan(df)
 
 
 def test_semantic_dedup_is_bucket_equi_join(spark, sf_dir):

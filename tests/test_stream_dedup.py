@@ -62,8 +62,8 @@ def test_content_dedup_keeps_first_per_payload(spark, tmp_path):
     out = run_to_completion(
         dedup_content(message_stream(spark, str(log))), str(tmp_path / "ckpt")
     )
-    got = sorted(r.payload for r in out.collect())
-    assert got == ['{"k": 1}', '{"k": 9}']
+    got = sorted(bytes(r.payload) for r in out.collect())
+    assert got == [b'{"k": 1}', b'{"k": 9}']
 
 
 def test_near_dup_flagger_incremental(spark, tmp_path):

@@ -42,7 +42,7 @@ def test_empty_log_dir_requires_explicit_ts_type(spark, tmp_path):
 def test_stream_matches_batch(spark, sf_dir, log_dir, tmp_path):
     stream = message_stream(spark, log_dir)
     got = run_to_completion(stream, str(tmp_path / "ckpt")).collect()
-    want = message_scan(spark, sf_dir, payload_binary=False).collect()
+    want = message_scan(spark, sf_dir).collect()
     assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
 
 
@@ -69,7 +69,7 @@ def test_int96_log_stream_matches_batch(spark, tmp_path):
         use_deprecated_int96_timestamps=True,
     )
     got = run_to_completion(message_stream(spark, str(log)), str(tmp_path / "ckpt")).collect()
-    want = message_scan(spark, str(log), payload_binary=False).collect()
+    want = message_scan(spark, str(log)).collect()
     assert len(want) == n
     assert sorted(tuple(r) for r in got) == sorted(tuple(r) for r in want)
 
